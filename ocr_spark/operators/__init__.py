@@ -7,4 +7,3 @@ from .extract import (  # noqa: F401
     extract_pages,
     extract_spans,
 )
-from . import ann, corpus_ops, curation, dedup, multimodal  # noqa: F401

@@ -1,30 +1,36 @@
 """The extraction operator — the engine's flagship map stage.
 
 Replaces the reference's queue/worker/per-page-HTTP pipeline
-(/root/reference/core/page_processor.py:502-626, task_queue.py:546-635)
-with one Arrow-batched ``mapInPandas`` over the documents table:
+(core/page_processor.py:502-626, task_queue.py:546-635) with one
+Arrow-batched ``mapInPandas`` over the documents table:
 
     scan(parquet/iceberg) -> admission filter (columnar, pushed down)
-      -> repartition by xxhash64(url) (skew defused, north rule)
+      -> balance: coalesce scan splits, or salted xxhash64(url) repartition
       -> mapInPandas(extract_batch)  # the only Python on the hot path
       -> per-doc rows (url, status, text, hash, metrics, partition_id)
 
-Per-document failures become (status='failed', error_message) rows —
-the reference's R2 semantics (poison rows never kill the job,
+Every row goes through one never-raising kernel, :func:`_extract`:
+sniff, parse (html or pdf), apply the F2 page limit, assemble. Per-document
+failures become (status='failed', error_message) rows — the reference's
+R2 semantics (poison rows never kill the job,
 core/error_handler.py:87-193) — instead of task retries.
 
-Two output shapes:
+Three output shapes, each a thin projection of that kernel behind one
+balance helper (:func:`_balanced_map`):
   * extract_documents: one row per document, text fully assembled
     inside the UDF (pages joined '\\n\\n').
   * extract_pages: one row per page (PDF fan-out, reference X1
     page_processor.py:393-400), for the built-in Spark assembly path
     ``assemble_documents`` (reference A1, task_manager.py:514-546).
+  * extract_spans: one row per content block / non-empty page, with
+    offsets into the assembled text.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from functools import partial
+from typing import Callable, Iterator, List, Optional
 
 import pandas as pd
 from pyspark import TaskContext
@@ -33,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions import MAX_PDF_PAGES, admission_ok, payload_kind, salted_key
 from ..html_extract import html_extract
-from ..pdf_extract import pdf_extract, pdf_extract_pages
+from ..pdf_extract import pdf_assemble, pdf_extract_pages
 from ..textops import MODERATION_BLOCKED_MESSAGE, sha256_text, sniff_kind
 
 EXTRACT_SCHEMA = (
@@ -52,80 +58,93 @@ SPANS_SCHEMA = (
     "span_kind string, span_text string, partition_id int"
 )
 
+# pandas dtypes for the schemas' integer columns; strings stay lists.
+_DTYPES = {"int": "int32", "bigint": "int64"}
 
-def _extract_one(
-    payload: Optional[bytes], max_pages: int = MAX_PDF_PAGES
-) -> tuple:
-    """(kind, status, error, n_pages, text) for one payload; never raises."""
+
+def _extract(payload: Optional[bytes], max_pages: int = MAX_PDF_PAGES) -> tuple:
+    """(kind, status, error, pages, out) for one payload; never raises.
+
+    ``pages`` is the per-page text (one page for HTML); ``out`` is the
+    assembled Extracted (text + spans), None unless status is
+    'completed'. A PDF over ``max_pages`` (reference F2, main.py:829-832)
+    fails with its pages still counted.
+    """
     kind = sniff_kind(payload)
     try:
         if kind == "pdf":
             pages = pdf_extract_pages(payload)
             if len(pages) > max_pages:
-                return kind, "failed", f"page count {len(pages)} exceeds limit", len(pages), None
-            text = "\n\n".join(p for p in pages if p)
-            return kind, "completed", None, len(pages), text
+                return kind, "failed", f"page count {len(pages)} exceeds limit", pages, None
+            return kind, "completed", None, pages, pdf_assemble(pages)
         if kind == "html":
             out = html_extract(payload)
-            return kind, "completed", None, 1, out.text
-        return kind, "failed", "unsupported payload type", 0, None
+            return kind, "completed", None, [out.text], out
+        return kind, "failed", "unsupported payload type", [], None
     except Exception as exc:  # pragma: no cover - defensive, R2 semantics
-        return kind, "failed", f"{type(exc).__name__}: {exc}", 0, None
+        return kind, "failed", f"{type(exc).__name__}: {exc}", [], None
 
 
-def make_extract_batch(max_pages: int = MAX_PDF_PAGES):
-    """Build the mapInPandas payload for document-level extraction with
-    the F2 page-count admission limit bound in (reference
-    main.py:829-832: configurable max page count per document)."""
-
-    def extract_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        for pdf_batch in batches:
-            t0 = time.monotonic_ns()
-            urls = pdf_batch["url"].tolist()
-            payloads = pdf_batch["html"].tolist()
-            n = len(urls)
-            kinds, statuses, errors, n_pages_list, texts = [], [], [], [], []
-            hashes, bytes_in, chars_out, elapsed = [], [], [], []
-            for payload in payloads:
-                d0 = time.monotonic_ns()
-                kind, status, error, n_pages, text = _extract_one(
-                    payload, max_pages
-                )
-                kinds.append(kind)
-                statuses.append(status)
-                errors.append(error)
-                n_pages_list.append(n_pages)
-                texts.append(text)
-                hashes.append(sha256_text(text) if text is not None else None)
-                bytes_in.append(len(payload) if payload is not None else 0)
-                chars_out.append(len(text) if text is not None else 0)
-                elapsed.append((time.monotonic_ns() - d0) // 1000)
-            del t0
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "kind": kinds,
-                    "status": statuses,
-                    "error_message": errors,
-                    "n_pages": pd.array(n_pages_list, dtype="int32"),
-                    "text": texts,
-                    "content_hash": hashes,
-                    "bytes_in": pd.array(bytes_in, dtype="int64"),
-                    "chars_out": pd.array(chars_out, dtype="int64"),
-                    "partition_id": pd.array([pid] * n, dtype="int32"),
-                    "elapsed_us": pd.array(elapsed, dtype="int64"),
-                }
-            )
-
-    return extract_batch
+def _map_rows(
+    batches: Iterator[pd.DataFrame], schema: str, project: Callable
+) -> Iterator[pd.DataFrame]:
+    """The one Arrow boundary: ``project(url, payload)`` returns the
+    output rows of one input row as tuples in ``schema`` order, minus
+    ``partition_id``, which is filled in here."""
+    fields = [f.split() for f in schema.split(",")]
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else -1
+    for frame in batches:
+        rows: List[tuple] = []
+        for url, payload in zip(frame["url"].tolist(), frame["html"].tolist()):
+            rows.extend(project(url, payload))
+        cols = zip(*rows)
+        data = {}
+        for name, typ in fields:
+            col = [pid] * len(rows) if name == "partition_id" else list(next(cols, ()))
+            data[name] = pd.array(col, dtype=_DTYPES[typ]) if typ in _DTYPES else col
+        yield pd.DataFrame(data)
 
 
-# Default-limit instance (the shape most callers and tests use).
-extract_batch = make_extract_batch()
+def _document_rows(url: str, payload: Optional[bytes], max_pages: int) -> List[tuple]:
+    t0 = time.monotonic_ns()
+    kind, status, error, pages, out = _extract(payload, max_pages)
+    text = out.text if out is not None else None
+    return [(
+        url, kind, status, error, len(pages), text,
+        sha256_text(text) if text is not None else None,
+        len(payload) if payload is not None else 0,
+        len(text) if text is not None else 0,
+        (time.monotonic_ns() - t0) // 1000,
+    )]
+
+
+def _page_rows(url: str, payload: Optional[bytes]) -> List[tuple]:
+    _, status, error, pages, _ = _extract(payload)
+    if status == "failed":
+        return [(url, 1, status, error, None, 0)]
+    return [(url, i, status, None, p, len(p)) for i, p in enumerate(pages, 1)]
+
+
+def _span_rows(url: str, payload: Optional[bytes]) -> List[tuple]:
+    out = _extract(payload)[4]
+    if out is None:
+        return []
+    return [
+        (url, i, sp["page"], sp["start"], sp["length"], sp["kind"],
+         out.text[sp["start"] : sp["start"] + sp["length"]])
+        for i, sp in enumerate(out.spans)
+    ]
+
+
+def extract_batch(
+    batches: Iterator[pd.DataFrame], max_pages: int = MAX_PDF_PAGES
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas payload: one EXTRACT_SCHEMA row per document. Bind a
+    non-default F2 page limit with ``functools.partial``."""
+    return _map_rows(
+        batches, EXTRACT_SCHEMA, partial(_document_rows, max_pages=max_pages)
+    )
 
 
 def extract_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -134,55 +153,11 @@ def extract_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     PDFs emit one row per page; HTML emits a single page-1 row (the
     reference's image tasks are single-page, task_manager.py:500-512).
     Empty pages keep status 'completed' with empty content, exactly the
-    rows the assembly filter F8 later drops.
+    rows the assembly filter F8 later drops. A failed document (over
+    the page limit, unparseable) emits one failed page-1 row carrying
+    the document's error_message.
     """
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for pdf_batch in batches:
-        out_url, out_page, out_status, out_err, out_content = [], [], [], [], []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            kind = sniff_kind(payload)
-            try:
-                if kind == "pdf":
-                    pages = pdf_extract_pages(payload)
-                    for i, page_text in enumerate(pages):
-                        out_url.append(url)
-                        out_page.append(i + 1)
-                        out_status.append("completed")
-                        out_err.append(None)
-                        out_content.append(page_text)
-                elif kind == "html":
-                    out_url.append(url)
-                    out_page.append(1)
-                    out_status.append("completed")
-                    out_err.append(None)
-                    out_content.append(html_extract(payload).text)
-                else:
-                    out_url.append(url)
-                    out_page.append(1)
-                    out_status.append("failed")
-                    out_err.append("unsupported payload type")
-                    out_content.append(None)
-            except Exception as exc:  # pragma: no cover
-                out_url.append(url)
-                out_page.append(1)
-                out_status.append("failed")
-                out_err.append(f"{type(exc).__name__}: {exc}")
-                out_content.append(None)
-        yield pd.DataFrame(
-            {
-                "url": out_url,
-                "page_number": pd.array(out_page, dtype="int32"),
-                "status": out_status,
-                "error_message": out_err,
-                "content": out_content,
-                "content_length": pd.array(
-                    [len(c) if c is not None else 0 for c in out_content],
-                    dtype="int64",
-                ),
-                "partition_id": pd.array([pid] * len(out_url), dtype="int32"),
-            }
-        )
+    return _map_rows(batches, PAGES_SCHEMA, _page_rows)
 
 
 def extract_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -200,68 +175,7 @@ def extract_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     wrong slice and a hash mismatch. Failed/unsupported docs emit no
     span rows; their status lives in the document-level output (R2).
     """
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for pdf_batch in batches:
-        url_o, idx_o, page_o, start_o, len_o, kind_o, text_o = (
-            [], [], [], [], [], [], [],
-        )
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            kind = sniff_kind(payload)
-            try:
-                if kind == "pdf":
-                    out = pdf_extract(payload)
-                elif kind == "html":
-                    out = html_extract(payload)
-                else:
-                    continue
-            except Exception:  # pragma: no cover - defensive, R2
-                continue
-            for i, sp in enumerate(out.spans):
-                url_o.append(url)
-                idx_o.append(i)
-                page_o.append(sp["page"])
-                start_o.append(sp["start"])
-                len_o.append(sp["length"])
-                kind_o.append(sp["kind"])
-                text_o.append(out.text[sp["start"] : sp["start"] + sp["length"]])
-        yield pd.DataFrame(
-            {
-                "url": url_o,
-                "span_idx": pd.array(idx_o, dtype="int32"),
-                "page": pd.array(page_o, dtype="int32"),
-                "start": pd.array(start_o, dtype="int64"),
-                "length": pd.array(len_o, dtype="int64"),
-                "span_kind": kind_o,
-                "span_text": text_o,
-                "partition_id": pd.array([pid] * len(url_o), dtype="int32"),
-            }
-        )
-
-
-def extract_spans(
-    df: DataFrame,
-    n_partitions: Optional[int] = None,
-    salt: int = 0,
-    strategy: str = "scan",
-) -> DataFrame:
-    """Span-level variant of :func:`extract_documents` — same admission
-    and balance strategies, output fan-out is one row per span. Scale
-    shape is identical to the document path (the span fan-out happens
-    inside the Arrow batch, no extra shuffle)."""
-    admitted = admit(df).select("url", "html")
-    if strategy == "scan":
-        parts = n_partitions or (
-            SCAN_OVERSUB * df.sparkSession.sparkContext.defaultParallelism
-        )
-        return admitted.coalesce(parts).mapInPandas(
-            extract_spans_batch, schema=SPANS_SCHEMA
-        )
-    if n_partitions:
-        admitted = admitted.repartition(n_partitions, salted_key(salt))
-    else:
-        admitted = admitted.repartition(salted_key(salt))
-    return admitted.mapInPandas(extract_spans_batch, schema=SPANS_SCHEMA)
+    return _map_rows(batches, SPANS_SCHEMA, _span_rows)
 
 
 def admit(df: DataFrame) -> DataFrame:
@@ -273,27 +187,39 @@ def admit(df: DataFrame) -> DataFrame:
     )
 
 
-# Payloads above this size are the ones the size-aware mode exists
-# for: multi-MB rows that skew task byte-load. Per-batch MEMORY is
-# bounded engine-side regardless (session.py caps Arrow batches by
-# bytes, spark.sql.execution.arrow.maxBytesPerBatch), so routing only
-# has to smooth task duration, not protect RSS.
-LARGE_PAYLOAD_BYTES = 1 * 1024 * 1024
-# size_aware over-partitioning factor: more, smaller tasks per core so
-# wave scheduling rebalances byte-skewed partitions (a straggler task
-# holds one slice, not 1/n_cores of the input).
-SIZE_AWARE_OVERSUB = 4
 # scan-strategy task oversubscription: ~4 coalesced tasks per core so
 # wave scheduling absorbs residual per-file byte variance without any
 # payload exchange.
 SCAN_OVERSUB = 4
 
 
+def _balanced_map(
+    df: DataFrame,
+    batch_fn: Callable,
+    schema: str,
+    n_partitions: Optional[int],
+    salt: int,
+    strategy: str,
+) -> DataFrame:
+    """Admission -> partition balance -> one mapInPandas (the strategies
+    are described on :func:`extract_documents`)."""
+    admitted = admit(df).select("url", "html")
+    if strategy == "scan":
+        admitted = admitted.coalesce(
+            n_partitions
+            or SCAN_OVERSUB * df.sparkSession.sparkContext.defaultParallelism
+        )
+    elif n_partitions:
+        admitted = admitted.repartition(n_partitions, salted_key(salt))
+    else:
+        admitted = admitted.repartition(salted_key(salt))
+    return admitted.mapInPandas(batch_fn, schema=schema)
+
+
 def extract_documents(
     df: DataFrame,
     n_partitions: Optional[int] = None,
     salt: int = 0,
-    size_aware: bool = False,
     max_pages: int = MAX_PDF_PAGES,
     strategy: str = "scan",
 ) -> DataFrame:
@@ -320,54 +246,43 @@ def extract_documents(
       needs url-hash co-location in the same job (the lineage
       pipeline's bucket-partitioned write, plans/lineage.py). This is
       the north-rule salting path; it trades one full payload shuffle
-      for placement control.
+      for placement control. For byte-skewed input (2 KB pages mixed
+      with 100 MB PDFs) pass more partitions than cores: per-batch
+      memory is already bounded by the Arrow byte cap (session.py),
+      so only task duration needs smoothing.
 
-    ``size_aware=True`` (implies shuffle) handles corpora mixing 2 KB
-    pages with 100 MB PDFs (SURVEY §4, replacing the reference's
-    file-size strategy heuristics, page_processor.py:88-153) with a
-    SINGLE scan and a SINGLE shuffle: per-batch memory is already
-    bounded engine-side (Arrow batches are byte-capped via
-    spark.sql.execution.arrow.maxBytesPerBatch, session.py), so the
-    only remaining hazard is task-duration skew — addressed by
-    over-partitioning SIZE_AWARE_OVERSUB x. Output is row-identical
-    under every strategy.
+    Output is row-identical under every strategy.
     """
     batch_fn = (
-        extract_batch if max_pages == MAX_PDF_PAGES else make_extract_batch(max_pages)
+        extract_batch
+        if max_pages == MAX_PDF_PAGES
+        else partial(extract_batch, max_pages=max_pages)
     )
-    admitted = admit(df).select("url", "html")
-    if size_aware:
-        strategy = "shuffle"
-    if strategy == "scan":
-        parts = n_partitions or (
-            SCAN_OVERSUB * df.sparkSession.sparkContext.defaultParallelism
-        )
-        return admitted.coalesce(parts).mapInPandas(
-            batch_fn, schema=EXTRACT_SCHEMA
-        )
-    parts = n_partitions
-    if size_aware:
-        base = n_partitions or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        parts = base * SIZE_AWARE_OVERSUB
-    if parts:
-        admitted = admitted.repartition(parts, salted_key(salt))
-    else:
-        admitted = admitted.repartition(salted_key(salt))
-    return admitted.mapInPandas(batch_fn, schema=EXTRACT_SCHEMA)
+    return _balanced_map(df, batch_fn, EXTRACT_SCHEMA, n_partitions, salt, strategy)
+
+
+def extract_spans(
+    df: DataFrame,
+    n_partitions: Optional[int] = None,
+    salt: int = 0,
+    strategy: str = "scan",
+) -> DataFrame:
+    """Span-level variant of :func:`extract_documents` — same admission
+    and balance strategies, output fan-out is one row per span. Scale
+    shape is identical to the document path (the span fan-out happens
+    inside the Arrow batch, no extra shuffle)."""
+    return _balanced_map(
+        df, extract_spans_batch, SPANS_SCHEMA, n_partitions, salt, strategy
+    )
 
 
 def extract_pages(
     df: DataFrame, n_partitions: Optional[int] = None, salt: int = 0
 ) -> DataFrame:
     """Page-level variant feeding the built-in assembly (A1)."""
-    admitted = admit(df).select("url", "html")
-    if n_partitions:
-        admitted = admitted.repartition(n_partitions, salted_key(salt))
-    else:
-        admitted = admitted.repartition(salted_key(salt))
-    return admitted.mapInPandas(extract_pages_batch, schema=PAGES_SCHEMA)
+    return _balanced_map(
+        df, extract_pages_batch, PAGES_SCHEMA, n_partitions, salt, "shuffle"
+    )
 
 
 def moderation_keep(status_col: Column, error_col: Column) -> Column:

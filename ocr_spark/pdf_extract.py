@@ -395,10 +395,10 @@ def pdf_extract_pages(pdf: bytes) -> List[str]:
     return pages
 
 
-def pdf_extract(pdf: bytes, url: Optional[str] = None) -> Extracted:
-    """Extract a PDF document: pages joined with '\\n\\n' (assembly rule
-    A1, reference core/task_manager.py:542), with per-page spans."""
-    pages = pdf_extract_pages(pdf)
+def pdf_assemble(pages: List[str]) -> Extracted:
+    """Assemble per-page texts into a document: non-empty pages joined
+    with '\\n\\n' (assembly rule A1, reference
+    core/task_manager.py:542), with one span per non-empty page."""
     spans = []
     offset = 0
     non_empty = [(i + 1, p) for i, p in enumerate(pages) if p]
@@ -419,3 +419,9 @@ def pdf_extract(pdf: bytes, url: Optional[str] = None) -> Extracted:
         "chars_out": len(text),
     }
     return Extracted(text=text, spans=spans, metrics=metrics)
+
+
+def pdf_extract(pdf: bytes, url: Optional[str] = None) -> Extracted:
+    """Extract a PDF document: :func:`pdf_extract_pages` then
+    :func:`pdf_assemble`."""
+    return pdf_assemble(pdf_extract_pages(pdf))

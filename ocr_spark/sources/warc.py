@@ -59,7 +59,7 @@ def split_records(blob: bytes) -> List[Tuple[Optional[str], bytes, str]]:
     """Parse a multi-record WARC blob into (url, payload, status) rows.
 
     Malformed content yields ``status != 'ok'`` rows instead of raising
-    (the R2 error-classification contract, operators/extract.py:51-66):
+    (the R2 error-classification contract, operators/extract.py _extract):
     a truncated final record becomes one ``truncated`` row; bytes that
     are not a record boundary are skipped by scanning to the next
     magic.

@@ -12,6 +12,7 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -76,3 +77,20 @@ def test_spark_submit_py_files_zip(spark, tmp_path):
     want = spark.read.parquet(inp).select("url", "text")
     assert got.count() == 60
     assert got.join(want, ["url", "text"], "inner").count() == 60
+
+
+def test_extract_import_leaves_other_operators_unloaded():
+    """Every Python worker that unpickles the extraction function imports
+    ``ocr_spark.operators.extract``; that must not drag in the unrelated
+    operator modules through the package ``__init__``."""
+    code = (
+        "import sys, ocr_spark.operators.extract\n"
+        "print(','.join(m for m in ('ann', 'corpus_ops', 'curation', 'dedup',"
+        " 'multimodal') if 'ocr_spark.operators.' + m in sys.modules))"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=REPO,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip() == "", proc.stdout

@@ -208,6 +208,49 @@ class TestAssembly:
         assert out[0].text == oracle
 
 
+def test_shape_parity_across_outputs(spark, docs):
+    """Documents, pages and spans project one kernel: per url every
+    page row carries the document's status, a failed document has one
+    failed page row, a completed document's n_pages is its page-row
+    count, and only completed documents have spans. An over-limit
+    (501-page) and a truncated PDF ride along with the corpus."""
+    from ocr_spark.sources.wrap import _build_pdf
+
+    over = _build_pdf([f"page {i} words" for i in range(501)])
+    two = _build_pdf(["first page words", "second page words"])
+    extra = spark.createDataFrame(
+        [
+            ("x://over-limit", bytearray(over)),
+            ("x://truncated", bytearray(two[: len(two) // 2])),
+        ],
+        "url string, html binary",
+    )
+    mixed = docs.select("url", "html").unionByName(extra)
+
+    documents = {
+        r.url: r
+        for r in extract_documents(mixed, n_partitions=4)
+        .select("url", "status", "n_pages")
+        .collect()
+    }
+    pages = {}
+    for r in extract_pages(mixed, n_partitions=4).select("url", "status").collect():
+        pages.setdefault(r.url, []).append(r.status)
+    span_urls = {
+        r.url for r in extract_spans(mixed, n_partitions=4).select("url").collect()
+    }
+
+    assert len(documents) == 302
+    assert documents["x://over-limit"].status == "failed"
+    for url, d in documents.items():
+        got = pages.get(url, [])
+        if d.status == "failed":
+            assert got == ["failed"], url
+        else:
+            assert got == ["completed"] * d.n_pages, url
+    assert span_urls <= {u for u, d in documents.items() if d.status == "completed"}
+
+
 class TestPlanShape:
     def test_admission_filter_pushed_to_scan(self, spark, corpus_path):
         """The length() predicate must appear in the scan's pushed or

@@ -105,10 +105,11 @@ def test_semi_join_stays_semi(spark, entry_mod):
     assert "LeftSemi" in plan, plan
 
 
-def test_size_aware_single_scan_single_shuffle(spark):
-    """size_aware routing must not fork a second branch over the
-    input: one parquet scan, one Exchange, one MapInPandas (memory is
-    bounded by the Arrow byte cap, parallelism by over-partitioning)."""
+def test_shuffle_strategy_single_scan_single_shuffle(spark):
+    """Over-partitioned shuffle extraction (the byte-skew setting) must
+    not fork a second branch over the input: one parquet scan, one
+    Exchange, one MapInPandas (memory is bounded by the Arrow byte cap,
+    parallelism by over-partitioning)."""
     from ocr_spark.corpus import write_corpus
     from ocr_spark.operators import extract_documents
     import tempfile
@@ -117,7 +118,7 @@ def test_size_aware_single_scan_single_shuffle(spark):
     p = os.path.join(d, "docs.parquet")
     write_corpus(p, 40, seed=27)
     df = extract_documents(
-        spark.read.parquet(p), n_partitions=4, size_aware=True
+        spark.read.parquet(p), n_partitions=16, strategy="shuffle"
     )
     plan = _plan(df)
     assert plan.count("Scan parquet") == 1, plan

@@ -170,11 +170,10 @@ def test_salted_agg_matches_plain_groupby(spark, tmp_path):
     assert final_plan.count("Exchange") == 2, final_plan
 
 
-def test_size_aware_extraction_identical_output(spark, tmp_path):
-    """size_aware routing (payload-size bucketing, SURVEY §4) changes
-    partitioning for oversized rows but never the results."""
+def test_shuffle_strategy_extraction_identical_output(spark, tmp_path):
+    """Over-partitioned shuffle extraction of byte-skewed input (SURVEY
+    §4) changes partitioning for oversized rows but never the results."""
     from ocr_spark.operators import extract_documents
-    from ocr_spark.operators.extract import LARGE_PAYLOAD_BYTES
     from ocr_spark.sources.wrap import wrap_text_html
 
     docs = _corpus(spark, tmp_path, n=120, seed=29)
@@ -184,11 +183,11 @@ def test_size_aware_extraction_identical_output(spark, tmp_path):
         [(f"fat://{i}", bytearray(wrap_text_html(fat_text))) for i in range(3)],
         "url string, html binary",
     )
-    assert len(wrap_text_html(fat_text)) > LARGE_PAYLOAD_BYTES
+    assert len(wrap_text_html(fat_text)) > 1024 * 1024
     mixed = docs.select("url", "html").unionByName(fat)
 
     plain = extract_documents(mixed, n_partitions=4)
-    routed = extract_documents(mixed, n_partitions=4, size_aware=True)
+    routed = extract_documents(mixed, n_partitions=16, strategy="shuffle")
     a = sorted((r.url, r.status, r.content_hash) for r in plain.collect())
     b = sorted((r.url, r.status, r.content_hash) for r in routed.collect())
     assert a == b
