@@ -41,7 +41,8 @@ def main() -> None:
     ap.add_argument("--lineage", required=True, help="lineage/checkpoint path")
     ap.add_argument("--buckets", type=int, default=64, help="url-hash buckets")
     ap.add_argument(
-        "--partitions", type=int, default=None, help="shuffle width override"
+        "--partitions", type=int, default=None,
+        help="extraction tasks, at most --buckets; each bucket is written by one task",
     )
     ap.add_argument("--run-id", default=None)
     ap.add_argument(

@@ -13,9 +13,9 @@ Layout:
     html_extract   HTML tokenizer -> DOM blocks -> boilerplate scoring
     pdf_extract    pure-Python PDF content-stream parser
     corpus         seeded synthetic corpus generator (full input shape)
-    operators/     Spark-side pipeline: admission, salting, extraction, assembly
+    operators/     Spark-side pipeline: admission, url-hash repartitioning, extraction, assembly
     plans/         lineage/checkpoint table + resume anti-join
-    functions/     column-expression helpers (salting, payload sniffing)
+    functions/     column-expression helpers (admission, url bucket, salted aggregation)
 """
 
 __version__ = "0.1.0"

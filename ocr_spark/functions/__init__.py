@@ -35,15 +35,19 @@ def payload_kind(html_col: str = "html") -> Column:
     )
 
 
-def admission_ok(kind_col: str = "kind", html_col: str = "html") -> Column:
-    """Size admission filter (reference F1): per-kind byte caps.
+def reject_reason(kind_col: str = "kind", html_col: str = "html") -> Column:
+    """Admission rule (reference F1 size caps, F3 unknown type): NULL
+    for an admitted row, else the reject reason. ``admit`` keeps the
+    NULL rows and ``sources.sinks.quarantine_rejects`` the rest.
     Page-count capping (F2) needs a parse, so it lives inside the
-    extraction UDF; this predicate is pushable to the scan."""
-    size = F.length(F.col(html_col))
+    extraction UDF; this expression is pushable to the scan. The
+    optimizer inlines ``kind`` into each branch, so pdf goes first: a
+    PDF row is sniffed once, any other row twice."""
+    size, kind = F.length(F.col(html_col)), F.col(kind_col)
     return (
-        F.when(F.col(kind_col) == "pdf", size <= F.lit(MAX_PDF_BYTES))
-        .when(F.col(kind_col) == "html", size <= F.lit(MAX_HTML_BYTES))
-        .otherwise(F.lit(False))
+        F.when(kind == "pdf", F.when(size > MAX_PDF_BYTES, F.lit("pdf too large")))
+        .when(kind == "html", F.when(size > MAX_HTML_BYTES, F.lit("html too large")))
+        .otherwise(F.lit("unsupported payload type"))
     )
 
 
@@ -53,9 +57,3 @@ def url_bucket(n_buckets: int, url_col: str = "url") -> Column:
     host-level skew per the north rule."""
     return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")
 
-
-def salted_key(salt: int = 0, url_col: str = "url") -> Column:
-    """Repartitioning key: xxhash64(url, salt). Distinct salts produce
-    distinct shuffles of the same rows — used to break residual
-    clustering when an upstream layout correlates with url hash."""
-    return F.xxhash64(F.col(url_col), F.lit(salt))

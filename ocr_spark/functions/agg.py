@@ -1,6 +1,6 @@
 """Skew-resistant two-stage aggregation — the salting pattern for
-aggregations (the extraction path already salts its repartition;
-this is the same defense for groupBy keys).
+aggregations (the extraction path spreads hot hosts with a full-url
+hash repartition; this is the matching defense for groupBy keys).
 
 A crawl's natural keys are Zipf-distributed (a few hosts own most
 rows). ``groupBy(host).agg(...)`` then sends every row of the hottest

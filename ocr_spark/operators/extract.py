@@ -5,7 +5,7 @@ Replaces the reference's queue/worker/per-page-HTTP pipeline
 Arrow-batched ``mapInPandas`` over the documents table:
 
     scan(parquet/iceberg) -> admission filter (columnar, pushed down)
-      -> balance: coalesce scan splits, or salted xxhash64(url) repartition
+      -> balance: coalesce scan splits, or an xxhash64(url) repartition
       -> mapInPandas(extract_batch)  # the only Python on the hot path
       -> per-doc rows (url, status, text, hash, metrics, partition_id)
 
@@ -37,7 +37,7 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import MAX_PDF_PAGES, admission_ok, payload_kind, salted_key
+from ..functions import MAX_PDF_PAGES, payload_kind, reject_reason
 from ..html_extract import html_extract
 from ..pdf_extract import pdf_assemble, pdf_extract_pages
 from ..textops import MODERATION_BLOCKED_MESSAGE, sha256_text, sniff_kind
@@ -180,11 +180,9 @@ def extract_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 
 def admit(df: DataFrame) -> DataFrame:
     """Admission control (reference F1/F3): sniff kind columnar-ly,
-    drop oversize/unknown payloads. The length predicate is a plain
+    keep the rows with no reject reason. The predicate is a plain
     expression Catalyst can evaluate at the scan."""
-    return df.withColumn("kind", payload_kind()).filter(
-        admission_ok("kind", "html")
-    )
+    return df.withColumn("kind", payload_kind()).filter(reject_reason().isNull())
 
 
 # scan-strategy task oversubscription: ~4 coalesced tasks per core so
@@ -198,7 +196,6 @@ def _balanced_map(
     batch_fn: Callable,
     schema: str,
     n_partitions: Optional[int],
-    salt: int,
     strategy: str,
 ) -> DataFrame:
     """Admission -> partition balance -> one mapInPandas (the strategies
@@ -210,16 +207,15 @@ def _balanced_map(
             or SCAN_OVERSUB * df.sparkSession.sparkContext.defaultParallelism
         )
     elif n_partitions:
-        admitted = admitted.repartition(n_partitions, salted_key(salt))
+        admitted = admitted.repartition(n_partitions, F.xxhash64("url"))
     else:
-        admitted = admitted.repartition(salted_key(salt))
+        admitted = admitted.repartition(F.xxhash64("url"))
     return admitted.mapInPandas(batch_fn, schema=schema)
 
 
 def extract_documents(
     df: DataFrame,
     n_partitions: Optional[int] = None,
-    salt: int = 0,
     max_pages: int = MAX_PDF_PAGES,
     strategy: str = "scan",
 ) -> DataFrame:
@@ -239,17 +235,15 @@ def extract_documents(
       run and capped 8->32 scaling at ~0.52; the scan strategy holds
       ~0.72-0.78 — at 100 TB, shuffling the corpus to fix skew that
       scan-granular splitting already bounds is pure waste.
-    * ``strategy='shuffle'`` — salted url-hash repartition
-      (xxhash64(url, salt)) before extraction. Right when the INPUT
-      itself is pathologically skewed (one giant file per hot host, a
-      single unsplittable row group) or when the downstream stage
-      needs url-hash co-location in the same job (the lineage
-      pipeline's bucket-partitioned write, plans/lineage.py). This is
-      the north-rule salting path; it trades one full payload shuffle
-      for placement control. For byte-skewed input (2 KB pages mixed
-      with 100 MB PDFs) pass more partitions than cores: per-batch
-      memory is already bounded by the Arrow byte cap (session.py),
-      so only task duration needs smoothing.
+    * ``strategy='shuffle'`` — url-hash repartition (xxhash64(url))
+      before extraction. Right when the INPUT itself is
+      pathologically skewed (one giant file per hot host, a single
+      unsplittable row group): a full-url hash spreads a hot host's
+      rows uniformly, for the price of one full payload shuffle. For
+      byte-skewed input (2 KB pages mixed with 100 MB PDFs) pass more
+      partitions than cores: per-batch memory is already bounded by
+      the Arrow byte cap (session.py), so only task duration needs
+      smoothing.
 
     Output is row-identical under every strategy.
     """
@@ -258,13 +252,12 @@ def extract_documents(
         if max_pages == MAX_PDF_PAGES
         else partial(extract_batch, max_pages=max_pages)
     )
-    return _balanced_map(df, batch_fn, EXTRACT_SCHEMA, n_partitions, salt, strategy)
+    return _balanced_map(df, batch_fn, EXTRACT_SCHEMA, n_partitions, strategy)
 
 
 def extract_spans(
     df: DataFrame,
     n_partitions: Optional[int] = None,
-    salt: int = 0,
     strategy: str = "scan",
 ) -> DataFrame:
     """Span-level variant of :func:`extract_documents` — same admission
@@ -272,16 +265,16 @@ def extract_spans(
     shape is identical to the document path (the span fan-out happens
     inside the Arrow batch, no extra shuffle)."""
     return _balanced_map(
-        df, extract_spans_batch, SPANS_SCHEMA, n_partitions, salt, strategy
+        df, extract_spans_batch, SPANS_SCHEMA, n_partitions, strategy
     )
 
 
 def extract_pages(
-    df: DataFrame, n_partitions: Optional[int] = None, salt: int = 0
+    df: DataFrame, n_partitions: Optional[int] = None
 ) -> DataFrame:
     """Page-level variant feeding the built-in assembly (A1)."""
     return _balanced_map(
-        df, extract_pages_batch, PAGES_SCHEMA, n_partitions, salt, "shuffle"
+        df, extract_pages_batch, PAGES_SCHEMA, n_partitions, "shuffle"
     )
 
 

@@ -17,9 +17,10 @@ hashes (reference integrity hashing, recovery_manager.py:288-290),
 computed with built-in functions so it stays JVM-side; it matches
 ``textops.content_hash_of`` byte-for-byte.
 
-Output layout: parquet partitioned by ``bucket`` — idempotent on
-resume (a re-written bucket replaces exactly its own directory,
-the MERGE-on-key analog of the reference's INSERT OR REPLACE upsert,
+Output layout: parquet partitioned by ``bucket``, one file per bucket
+per run (one task writes each bucket) — idempotent on resume (a
+re-written bucket replaces exactly its own directory, the
+MERGE-on-key analog of the reference's INSERT OR REPLACE upsert,
 database.py:860-869).
 """
 
@@ -28,12 +29,13 @@ from __future__ import annotations
 import uuid
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import url_bucket
 from .fs import hadoop_fs
-from ..operators.extract import extract_documents
+from ..operators.extract import EXTRACT_SCHEMA, admit, extract_batch, extract_documents
 
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, status string, n_docs bigint, n_ok bigint, "
@@ -98,11 +100,17 @@ def done_buckets(spark: SparkSession, lineage_path: str) -> Optional[list]:
     bucket count) and materializing it FREEZES resume state at plan
     time — a lazy read of the lineage table here would be re-evaluated
     by later actions in the same job, after this run has appended its
-    own lineage rows, silently emptying the pending set.
+    own lineage rows, silently emptying the pending set. A missing
+    path is checked for, not read (a failed read logs a Java stack
+    trace); a directory with no parquet file yet (a first run killed
+    in its lineage append) also counts as no lineage.
     """
+    fs, Path = hadoop_fs(spark, lineage_path)
+    if not fs.exists(Path(lineage_path)):
+        return None
     try:
         lineage = spark.read.parquet(lineage_path)
-    except Exception:
+    except AnalysisException:
         return None
     rows = (
         lineage.filter(F.col("status") == "done").select("bucket").distinct().collect()
@@ -121,15 +129,14 @@ def _filter_not_in_buckets(
     spark: SparkSession,
     df: DataFrame,
     done: Optional[list],
-    strategy: str = "auto",
 ) -> DataFrame:
     """Rows of ``df`` (carrying a ``bucket`` column) whose bucket is
-    not in ``done``. 'isin' evaluates as a plain row-level predicate
-    (no join at all); 'anti_join' broadcasts the done-set so the big
-    side never shuffles."""
+    not in ``done``. Up to ISIN_MAX_BUCKETS done ids this is a plain
+    row-level isin predicate (no join at all); above it, a broadcast
+    anti-join of the done-set, so the big side never shuffles."""
     if not done:
         return df
-    if strategy == "isin" or (strategy == "auto" and len(done) <= ISIN_MAX_BUCKETS):
+    if len(done) <= ISIN_MAX_BUCKETS:
         return df.filter(~F.col("bucket").isin(done))
     done_df = spark.createDataFrame([(int(b),) for b in done], "bucket int")
     return df.join(F.broadcast(done_df), "bucket", "left_anti")
@@ -140,17 +147,13 @@ def pending_after_resume(
     input_df: DataFrame,
     lineage_path: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Input rows whose bucket has no 'done' lineage row.
-
-    strategy: 'auto' | 'isin' | 'anti_join' (see
-    _filter_not_in_buckets). Both snapshot the done-set at call time
-    (see done_buckets).
-    """
+    """Input rows whose bucket has no 'done' lineage row (see
+    _filter_not_in_buckets), the done-set snapshotted at call time
+    (see done_buckets)."""
     with_bucket = input_df.withColumn("bucket", url_bucket(n_buckets))
     done = done_buckets(spark, lineage_path)
-    return _filter_not_in_buckets(spark, with_bucket, done, strategy)
+    return _filter_not_in_buckets(spark, with_bucket, done)
 
 
 def run_pipeline(
@@ -164,9 +167,12 @@ def run_pipeline(
 ) -> dict:
     """The resumable extraction job (build plan §7.6).
 
-    scan -> resume anti-join -> extract -> write output partitioned by
-    bucket (dynamic overwrite: reruns replace exactly the buckets they
-    recompute) -> append lineage rows.
+    scan -> resume filter -> admission -> exchange sending bucket b to
+    task b % width -> extract -> write output partitioned by bucket
+    (dynamic overwrite: reruns replace exactly the buckets they
+    recompute) -> append lineage rows. ``width`` is ``n_partitions``
+    (default spark.sql.shuffle.partitions) capped at ``n_buckets``;
+    AQE does not coalesce it.
 
     Returns a small summary dict (counts only — no data collected).
     """
@@ -179,12 +185,16 @@ def run_pipeline(
     if pending.isEmpty():
         return {"run_id": run_id, "buckets_processed": 0, "docs": 0}
 
-    # strategy='shuffle': the bucket-partitioned write below needs
-    # url-hash co-location (scan-strategy tasks would each write up to
-    # n_buckets small files); the one payload exchange buys placement.
-    extracted = extract_documents(
-        pending, n_partitions=n_partitions, strategy="shuffle"
-    ).withColumn("bucket", url_bucket(n_buckets))
+    width = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # mapInPandas emits EXTRACT_SCHEMA only: the output's bucket column
+    # is the same url_bucket expression, applied again.
+    extracted = (
+        admit(pending)
+        .repartitionById(min(width, n_buckets), "bucket")
+        .select("url", "html")
+        .mapInPandas(extract_batch, schema=EXTRACT_SCHEMA)
+        .withColumn("bucket", url_bucket(n_buckets))
+    )
     # Single extraction pass straight to the sink — no persist of the
     # full output (a persist here would push a second copy of the
     # corpus, text included, through memory+disk at 100 TB). Lineage is

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import MAX_HTML_BYTES, MAX_PDF_BYTES, payload_kind
+from ..functions import payload_kind, reject_reason
 
 
 def export_json(extracted: DataFrame, path: str) -> None:
@@ -65,22 +65,13 @@ def export_markdown(extracted: DataFrame, path: str) -> None:
 
 def quarantine_rejects(df: DataFrame, path: str) -> int:
     """Write admission-rejected rows (F1 size caps / F3 unknown type)
-    with reasons; returns the reject count.  The predicate is the
-    exact complement of operators.extract.admit."""
-    kind = payload_kind()
-    size = F.length(F.col("html"))
-    reason = (
-        F.when(kind == "unknown", F.lit("unsupported payload type"))
-        .when((kind == "pdf") & (size > MAX_PDF_BYTES), F.lit("pdf too large"))
-        .when(
-            (kind == "html") & (size > MAX_HTML_BYTES), F.lit("html too large")
-        )
-        .otherwise(F.lit(None))
-    )
+    with reasons; returns the reject count. The rows are exactly those
+    operators.extract.admit drops (both read functions.reject_reason)."""
     rejects = (
-        df.withColumn("reject_reason", reason)
+        df.withColumn("kind", payload_kind())
+        .withColumn("reject_reason", reject_reason())
         .filter(F.col("reject_reason").isNotNull())
-        .select("url", F.col("reject_reason"), size.alias("bytes_in"))
+        .select("url", "reject_reason", F.length("html").alias("bytes_in"))
     )
     rejects.write.mode("overwrite").parquet(path)
     return rejects.count()

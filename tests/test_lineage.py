@@ -1,13 +1,20 @@
 """Lineage + resume tests (SURVEY.md §5.4): partial run, rerun,
 no duplicate work, identical final table, integrity hashes."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
 from ocr_spark import textops
 from ocr_spark.functions import url_bucket
+from ocr_spark.operators import extract_documents
 from ocr_spark.plans import pending_after_resume, run_pipeline
-from ocr_spark.plans.lineage import output_is_complete
+from ocr_spark.plans.lineage import (
+    ISIN_MAX_BUCKETS,
+    _filter_not_in_buckets,
+    output_is_complete,
+)
 
 N_BUCKETS = 16
 
@@ -142,6 +149,82 @@ class TestRunPipeline:
         new = [s for s in sc.getRDDStorageInfo() if s.id() not in before]
         assert len(new) == 0, [str(s) for s in new]
 
+    @pytest.mark.parametrize("n_partitions", [None, 8, 32])
+    def test_one_file_per_bucket_same_rows(
+        self, spark, corpus_path, paths, monkeypatch, n_partitions
+    ):
+        """Each bucket is written by exactly one task, at any width:
+        one parquet file per bucket directory, the same rows as
+        extract_documents, and lineage sums that add up. The written
+        plan has one exchange, keyed on the bucket, and one
+        MapInPandas."""
+        import glob
+        import os
+
+        from pyspark.sql import DataFrameWriter
+
+        plans = []
+        write = DataFrameWriter.parquet
+
+        def capture(writer, path, *args, **kwargs):
+            plans.append(writer._df._jdf.queryExecution().executedPlan().toString())
+            return write(writer, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+        summary = run_pipeline(
+            spark,
+            corpus_path,
+            paths["output"],
+            paths["lineage"],
+            n_buckets=N_BUCKETS,
+            n_partitions=n_partitions,
+        )
+        monkeypatch.undo()
+        assert summary["docs"] == 300
+
+        bucket_dirs = glob.glob(os.path.join(paths["output"], "bucket=*"))
+        assert len(bucket_dirs) == N_BUCKETS
+        for d in bucket_dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+        plan = plans[0]
+        assert plan.count("Exchange") == 1, plan
+        exchange = next(line for line in plan.splitlines() if "Exchange" in line)
+        assert "shufflepartitionidpassthrough" in exchange, plan
+        key = re.search(r"direct_shuffle_partition_id\((bucket#\d+)\)", exchange)
+        assert key, plan
+        bucket_expr = rf"pmod\(xxhash64\(url#\d+, 42\), {N_BUCKETS}\) as int\) AS {key[1]}\b"
+        assert re.search(bucket_expr, plan), plan
+        assert "Filter" in plan[plan.index("Exchange"):], plan  # admission first
+        assert plan.count("MapInPandas") == 1, plan
+
+        cols = ["url", "content_hash", "status", "bytes_in", "chars_out"]
+        got = sorted(
+            tuple(r) for r in spark.read.parquet(paths["output"]).select(*cols).collect()
+        )
+        want = sorted(
+            tuple(r)
+            for r in extract_documents(spark.read.parquet(corpus_path))
+            .select(*cols)
+            .collect()
+        )
+        assert got == want
+
+        lineage = spark.read.parquet(paths["lineage"]).agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("n_docs").alias("docs"),
+            F.sum("n_ok").alias("ok"),
+            F.sum("n_failed").alias("failed"),
+            F.sum("bytes_in").alias("bytes"),
+            F.sum("chars_out").alias("chars"),
+        ).first()
+        assert lineage.rows == N_BUCKETS
+        assert lineage.docs == len(want)
+        assert lineage.ok == sum(r[2] == "completed" for r in want)
+        assert lineage.failed == sum(r[2] != "completed" for r in want)
+        assert lineage.bytes == sum(r[3] for r in want)
+        assert lineage.chars == sum(r[4] for r in want)
+
     def test_lineage_metrics(self, spark, corpus_path, paths):
         run_pipeline(
             spark,
@@ -172,21 +255,24 @@ class TestPendingAfterResume:
         assert pending.count() == 300
 
     def test_anti_join_is_broadcast(self, spark, corpus_path, paths):
-        """The anti-join strategy must broadcast the tiny done-set, not
-        shuffle the documents table; the default (isin) strategy must
-        compile to a plain filter with no join at all."""
+        """Above ISIN_MAX_BUCKETS done ids the resume filter must
+        broadcast the done-set, not shuffle the documents table; at or
+        below it (the real done-set here) it must compile to a plain
+        filter with no join at all."""
         run_pipeline(
             spark, corpus_path, paths["output"], paths["lineage"], n_buckets=8
         )
         docs = spark.read.parquet(corpus_path)
-        pending = pending_after_resume(
-            spark, docs, paths["lineage"], n_buckets=8, strategy="anti_join"
+        pending = _filter_not_in_buckets(
+            spark,
+            docs.withColumn("bucket", url_bucket(8)),
+            list(range(ISIN_MAX_BUCKETS + 1)),
         )
         plan = pending._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
         pending_isin = pending_after_resume(
-            spark, docs, paths["lineage"], n_buckets=8, strategy="isin"
+            spark, docs, paths["lineage"], n_buckets=8
         )
         plan2 = pending_isin._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan2

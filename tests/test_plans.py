@@ -28,7 +28,7 @@ def entry_mod():
 def test_flagship_plan_shape(spark):
     """Default (scan strategy): scan(pruned) -> filter -> narrow
     coalesce -> MapInPandas with ZERO payload exchange; the shuffle
-    strategy keeps exactly the one salted url-hash exchange. No Python
+    strategy keeps exactly the one url-hash exchange. No Python
     outside the one mapInPandas either way."""
     from ocr_spark.corpus import write_corpus
     from ocr_spark.operators import extract_documents
@@ -184,7 +184,13 @@ def test_resume_antijoin_no_shuffle_on_big_side(spark, tmp_path):
     """The resume filter is either an isin predicate (no join) or a
     broadcast anti-join — the input table must never shuffle."""
     from ocr_spark.corpus import write_corpus
-    from ocr_spark.plans.lineage import pending_after_resume, run_pipeline
+    from ocr_spark.functions import url_bucket
+    from ocr_spark.plans.lineage import (
+        ISIN_MAX_BUCKETS,
+        _filter_not_in_buckets,
+        pending_after_resume,
+        run_pipeline,
+    )
 
     inp = str(tmp_path / "in.parquet")
     write_corpus(inp, 60, seed=13)
@@ -192,11 +198,14 @@ def test_resume_antijoin_no_shuffle_on_big_side(spark, tmp_path):
     run_pipeline(spark, inp, out, lin, n_buckets=8)
 
     docs = spark.read.parquet(inp)
-    pending_isin = pending_after_resume(spark, docs, lin, 8, strategy="isin")
+    pending_isin = pending_after_resume(spark, docs, lin, 8)
+    assert "Join" not in _plan(pending_isin)
     assert "Exchange" not in _plan(pending_isin)
 
-    pending_anti = pending_after_resume(
-        spark, docs, lin, 8, strategy="anti_join"
+    pending_anti = _filter_not_in_buckets(
+        spark,
+        docs.withColumn("bucket", url_bucket(8)),
+        list(range(ISIN_MAX_BUCKETS + 1)),
     )
     plan = _plan(pending_anti)
     assert "BroadcastHashJoin LeftAnti" in plan.replace("  ", " ") or (

@@ -1,5 +1,5 @@
 """Export sinks (S6), quarantine routing (F1/F3), the spark-submit job
-entrypoint, and the url-hash salting skew guarantee (north rule)."""
+entrypoint, and the url-hash repartitioning skew guarantee (north rule)."""
 
 import json
 import os
@@ -71,6 +71,8 @@ def test_job_entrypoint_cli(tmp_path):
     r1 = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=600)
     s1 = json.loads(r1.stdout.strip().splitlines()[-1])
     assert s1["docs"] == 80 and s1["buckets_processed"] == 8
+    # a first run has no lineage yet, and must not log a stack trace
+    assert "FileNotFoundException" not in r1.stderr, r1.stderr[-2000:]
     yld = str(tmp_path / "yield")
     r2 = subprocess.run(
         cmd + ["--yield-report", yld],
@@ -108,11 +110,9 @@ def test_url_hash_salting_defuses_host_skew(spark, tmp_path):
             .collect()
         ]
 
-    from ocr_spark.functions import salted_key
-
     p = 16
     by_host = partition_counts(docs.repartition(p, F.xxhash64(host)))
-    by_url = partition_counts(docs.repartition(p, salted_key()))
+    by_url = partition_counts(docs.repartition(p, F.xxhash64("url")))
 
     mean = 2000 / p
     # host keying collapses the head hosts into a few giant partitions
@@ -120,21 +120,6 @@ def test_url_hash_salting_defuses_host_skew(spark, tmp_path):
     # url-hash keying is near-uniform and uses every partition
     assert max(by_url) < 1.5 * mean
     assert len(by_url) == p
-
-
-def test_salt_changes_layout_not_content(spark, tmp_path):
-    """Different salts shuffle rows differently but extraction output
-    is identical — the salt is pure layout."""
-    from ocr_spark.operators import extract_documents
-
-    docs = _corpus(spark, tmp_path, n=100, seed=7)
-    a = extract_documents(docs, n_partitions=8, salt=0, strategy="shuffle")
-    b = extract_documents(
-        docs, n_partitions=8, salt=12345, strategy="shuffle"
-    )
-    ra = sorted((r.url, r.content_hash) for r in a.collect())
-    rb = sorted((r.url, r.content_hash) for r in b.collect())
-    assert ra == rb
 
 
 def test_salted_agg_matches_plain_groupby(spark, tmp_path):
