@@ -188,3 +188,106 @@ class TestCorpusRoundtrip:
         top = hosts.most_common(1)[0][1]
         assert top > 2000 * 0.05  # head host dominates
         assert len(hosts) > 50  # but there is a long tail
+
+
+# ---------------------------------------------------------------------------
+# Golden digest: one sha256 over the extractor outputs of a fixed seeded
+# corpus. Any change to either kernel must leave it unchanged.
+# ---------------------------------------------------------------------------
+
+_HTML_FRAGMENTS = (
+    "<", ">", "</", "<!--", "-->", "<!DOCTYPE x>", "<?x", "<![CDATA[", "&amp;",
+    "&lt;", "&", "<p>", "</p>", "<div>", "</div>", "<a href=x>", "</a>",
+    "<h2>", "</h2>", "<br/>", "<hr>", "<li>", "</ul>", "<b>", "</i>",
+    "<script>", "</script>", "<STYLE>", "</style", "<title>", "</title>",
+    "<textarea>", "<svg>", "</svg>", "<nav>", "</footer>", '<div class="menu">',
+    "<div id='main'>", "<p/>", "< p>", "<1>", "\n", " ", "word",
+)
+
+_PDF_FRAGMENTS = (
+    "(", ")", "\\", "\\(", "\\053", "\\\n", "<", ">", "<<", ">>", "<4142>",
+    "<4 1>", "[", "]", "/", "/F1", "%", "% c\n", "Tj", "TJ", "Td", "TD",
+    "T*", "'", '"', "Tm", "TL", "BT", "ET", " 1.5 ", "-.3", "+", ".", "12",
+    "\n", " ", "\t", "\x00", "q", "{", "}",
+)
+
+
+def _mutate(rng, text, fragments):
+    for _ in range(rng.randint(1, 4)):
+        op = rng.random()
+        pos = rng.randint(0, len(text))
+        if op < 0.6:
+            text = text[:pos] + rng.choice(fragments) + text[pos:]
+        elif op < 0.8:
+            text = text[:pos] + text[pos + rng.randint(1, 8) :]
+        else:
+            text = text[:pos]
+    return text
+
+
+def _plain_pdf(content: bytes) -> bytes:
+    """One-page PDF with an uncompressed, length-free content stream."""
+    return (
+        b"%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< >>\nstream\n" + content + b"\nendstream\nendobj\n"
+    )
+
+
+def _golden_records():
+    import re
+    import zlib
+
+    from ocr_spark.textops import sniff_kind
+
+    def html_record(payload):
+        out = html_extract(payload)
+        return ("html", out.text, out.spans, sorted(out.metrics.items()))
+
+    def pdf_record(payload):
+        try:
+            return ("pdf", pdf_extract_pages(payload))
+        except Exception as exc:  # the class is part of the record
+            return ("pdf-error", type(exc).__name__)
+
+    shapes = (
+        dict(n_docs=240, seed=101, pdf_fraction=0.1, paras=(1, 8)),
+        dict(n_docs=24, seed=202, pdf_fraction=0.5, paras=(70, 160), pdf_pages=(6, 16)),
+    )
+    htmls, contents = [], []
+    for shape in shapes:
+        for row in corpus.generate_rows(**shape):
+            payload = row["html"]
+            if sniff_kind(payload) == "pdf":
+                yield pdf_record(payload)
+                for m in re.finditer(rb"stream\n(.*?)\nendstream", payload, re.S):
+                    contents.append(zlib.decompress(m.group(1)).decode("latin-1"))
+            else:
+                yield html_record(payload)
+                htmls.append(payload.decode("utf-8"))
+
+    rng = random.Random(4242)
+    small_htmls = [h for h in htmls if len(h) < 8000]
+    for _ in range(1500):
+        text = _mutate(rng, rng.choice(small_htmls), _HTML_FRAGMENTS)
+        yield html_record(text.encode("utf-8"))
+    for _ in range(1500):
+        text = _mutate(rng, rng.choice(contents), _PDF_FRAGMENTS)
+        yield pdf_record(_plain_pdf(text.encode("latin-1")))
+
+
+GOLDEN_SHA256 = "752cac22e81c2c8103e473dbffe38e8e4a86b8bf5fb695d3e2580118e059d9e1"
+
+
+def test_golden_digest():
+    import hashlib
+
+    digest = hashlib.sha256()
+    n = 0
+    for record in _golden_records():
+        digest.update(repr(record).encode("utf-8"))
+        n += 1
+    assert n == 240 + 24 + 3000
+    assert digest.hexdigest() == GOLDEN_SHA256
