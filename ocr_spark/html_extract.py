@@ -2,12 +2,12 @@
 
 Replaces the reference's per-page vision-model call
 (/root/reference/core/page_processor.py:883-989) with deterministic
-in-process extraction: a hand-written HTML tokenizer feeds a flat block
-builder; each block carries text length, link-text length, heading flag
-and a boilerplate-ancestry flag; a text-density / link-density
-classifier (Boilerpipe/trafilatura-style) keeps content blocks, which
-are joined with '\\n\\n' (the reference's page-assembly separator,
-core/task_manager.py:542).
+in-process extraction: a hand-written, regex-stepped HTML tokenizer
+builds flat text blocks; each block carries text length, link-text
+length, heading flag and a boilerplate-ancestry flag; a text-density /
+link-density classifier (Boilerpipe/trafilatura-style) keeps content
+blocks, which are joined with '\\n\\n' (the reference's page-assembly
+separator, core/task_manager.py:542).
 
 Runs identically in the pytest oracle and inside Arrow-batched pandas
 UDFs on executors — determinism and byte-identity are owned end-to-end.
@@ -94,72 +94,12 @@ def _decode(payload: bytes) -> str:
         return payload.decode("utf-8", errors="replace")
 
 
-class _BlockBuilder:
-    """Accumulates text runs and finalizes them into Blocks at
-    block-tag boundaries."""
-
-    def __init__(self) -> None:
-        self.blocks: List[Block] = []
-        self._parts: List[str] = []
-        self._link_chars = 0
-        self._chars = 0
-        self._tag = "p"
-        self._heading = False
-        self._boiler = False
-
-    def set_context(self, tag: str, heading: bool, boiler: bool) -> None:
-        if not self._parts:
-            self._tag = tag
-            self._heading = heading
-            self._boiler = boiler
-        else:
-            # A block spanning contexts inherits the "worst" flags.
-            self._heading = self._heading or heading
-            self._boiler = self._boiler or boiler
-
-    def add_text(self, text: str, in_link: bool, boiler: bool) -> None:
-        if not text:
-            return
-        self._parts.append(text)
-        stripped_len = len(text.strip())
-        self._chars += stripped_len
-        if in_link:
-            self._link_chars += stripped_len
-        self._boiler = self._boiler or boiler
-
-    def flush(self) -> None:
-        # Empty flushes (most block-tag boundaries) still reset the
-        # context flags — a heading/boiler context must not leak into
-        # bare text that follows a closed empty element.
-        if self._parts:
-            raw = "".join(self._parts)
-            words = raw.split()
-            if words:
-                text = " ".join(words)
-                self.blocks.append(
-                    Block(
-                        text=text,
-                        tag=self._tag,
-                        chars=self._chars,
-                        link_chars=self._link_chars,
-                        words=len(words),
-                        heading=self._heading,
-                        boiler=self._boiler,
-                    )
-                )
-            self._parts = []
-            self._link_chars = 0
-            self._chars = 0
-        self._heading = False
-        self._boiler = False
-
-
 # Parsed-tag memo: raw tag slice -> (closing, tag, self_closing,
-# is_boiler, is_skip). Tag markup repeats heavily (every <p>, </p>,
-# </a>… is the same string), so parsing each distinct slice once
-# roughly halves tokenizer time; entries are pure functions of the
-# slice, so the cache never changes results. Bounded to keep unique
-# attr-bearing tags (hrefs) from growing it without limit.
+# is_boiler, is_skip, is_block, is_heading). Tag markup repeats heavily
+# (every <p>, </p>, </a>… is the same string), so parsing each distinct
+# slice once roughly halves tokenizer time; entries are pure functions
+# of the slice, so the cache never changes results. Bounded to keep
+# unique attr-bearing tags (hrefs) from growing it without limit.
 _TAG_CACHE: dict = {}
 _TAG_CACHE_MAX = 100_000
 
@@ -183,112 +123,150 @@ def _parse_tag(raw_tag: str):
                     if value and _BOILER_ATTR_RE.search(value):
                         is_boiler = True
                         break
-        parsed = (closing, tag, self_closing, is_boiler, tag in _SKIP_SUBTREE_TAGS)
+        parsed = (
+            closing,
+            tag,
+            self_closing,
+            is_boiler,
+            tag in _SKIP_SUBTREE_TAGS,
+            tag in _BLOCK_TAGS,
+            tag in _HEADING_TAGS,
+        )
     if len(_TAG_CACHE) >= _TAG_CACHE_MAX:
         _TAG_CACHE.clear()
     _TAG_CACHE[raw_tag] = parsed
     return parsed
 
 
+# One tokenizer step: the text run up to the next '<' (group 1), then a
+# comment or declaration / processing instruction, skipped to its end
+# or to the end of input (group 2), or a tag up to the first '>'
+# (group 3). Neither matching means the input ends, or ends in a '<'
+# that never closes.
+_STEP_RE = re.compile(
+    r"([^<]*)(?:<(?:(!--.*?(?:-->|\Z)|[!?][^>]*>?)|([^>]*)>))?", re.S
+)
+
+# Raw-text elements: their content is skipped straight to the closing
+# tag, matched ASCII-case-insensitively on the original string.
+_RAW_TEXT_CLOSE = {
+    tag: re.compile(f"</{tag}[^>]*>?", re.I | re.A)
+    for tag in ("script", "style", "textarea")
+}
+
+# The end of input acts as a closing block tag: it flushes the last
+# block, and its empty name matches nothing on the stack.
+_END_OF_INPUT = (True, "", False, False, False, True, False)
+
+
 def tokenize_blocks(html_text: str) -> List[Block]:
-    """Single forward scan over the markup producing flat text blocks."""
-    builder = _BlockBuilder()
-    n = len(html_text)
-    lower_text = html_text.lower()  # computed once; raw-text skips search it
-    i = 0
+    """Single forward scan over the markup producing flat text blocks.
+
+    Text runs accumulate into the open block; a block tag (or the end
+    of input) flushes them into a :class:`Block` and resets the
+    heading/boiler context, which an opening block tag then sets anew.
+    """
+    blocks: List[Block] = []
+    parts: List[str] = []
+    chars = link_chars = 0
+    block_tag, block_heading, block_boiler = "p", False, False
     link_depth = 0
-    skip_depth = 0  # inside script/style/head/...
-    boiler_depth = 0  # inside nav/footer/... or boiler-classed subtree
-    heading_depth = 0
-    # Stack of (tag, was_boiler, was_skip, was_heading) for close matching.
+    in_skip = in_boiler = in_heading = False
+    # (tag, in_boiler, in_skip, in_heading) as they were before each
+    # open tag; closing a tag restores them.
     stack: List[tuple] = []
+    step = _STEP_RE.match
+    cache_get = _TAG_CACHE.get
+    unescape = _htmllib.unescape
+    n = len(html_text)
+    i = 0
 
-    while i < n:
-        lt = html_text.find("<", i)
-        if lt == -1:
-            if skip_depth == 0:
-                builder.add_text(
-                    _htmllib.unescape(html_text[i:]), link_depth > 0, boiler_depth > 0
-                )
-            break
-        if lt > i and skip_depth == 0:
-            builder.add_text(
-                _htmllib.unescape(html_text[i:lt]), link_depth > 0, boiler_depth > 0
-            )
-        # Comment / declaration / processing instruction.
-        if html_text.startswith("<!--", lt):
-            end = html_text.find("-->", lt + 4)
-            i = n if end == -1 else end + 3
+    while i <= n:
+        m = step(html_text, i)
+        text = m[1]
+        if text and not in_skip:
+            if "&" in text:
+                text = unescape(text)
+            if text:  # unescape can empty a run ("&#1;")
+                parts.append(text)
+                stripped_len = len(text.strip())
+                chars += stripped_len
+                if link_depth:
+                    link_chars += stripped_len
+                if in_boiler:
+                    block_boiler = True
+        kind = m.lastindex
+        if kind == 3:
+            i = m.end()
+            raw_tag = m[3]
+            parsed = cache_get(raw_tag, False)
+            if parsed is False:
+                parsed = _parse_tag(raw_tag)
+            if parsed is None:
+                continue
+        elif kind == 2:
+            i = m.end()
             continue
-        if lt + 1 < n and html_text[lt + 1] in "!?":
-            end = html_text.find(">", lt + 1)
-            i = n if end == -1 else end + 1
-            continue
+        else:
+            parsed = _END_OF_INPUT
+            i = n + 1
+        closing, tag, self_closing, is_boiler, is_skip, is_block, is_heading = parsed
 
-        gt = html_text.find(">", lt + 1)
-        if gt == -1:
-            break
-        raw_tag = html_text[lt + 1 : gt]
-        i = gt + 1
-
-        parsed = _TAG_CACHE.get(raw_tag, False)
-        if parsed is False:
-            parsed = _parse_tag(raw_tag)
-        if parsed is None:
-            continue
-        closing, tag, self_closing, is_boiler, is_skip = parsed
+        if is_block:
+            if parts:
+                words = "".join(parts).split()
+                if words:
+                    blocks.append(
+                        Block(
+                            " ".join(words),
+                            block_tag,
+                            chars,
+                            link_chars,
+                            len(words),
+                            block_heading,
+                            block_boiler,
+                        )
+                    )
+                parts = []
+                chars = link_chars = 0
+            if closing or self_closing:
+                block_heading = block_boiler = False
+            else:
+                block_tag = tag
+                block_heading = is_heading or in_heading
+                block_boiler = is_boiler or in_boiler
 
         if closing:
-            if tag in _BLOCK_TAGS:
-                builder.flush()
-            if tag == "a" and link_depth > 0:
+            if tag == "a" and link_depth:
                 link_depth -= 1
-            # Unwind the stack to the nearest matching open tag.
-            for idx in range(len(stack) - 1, -1, -1):
-                if stack[idx][0] == tag:
-                    for _ in range(len(stack) - idx):
-                        popped, p_boiler, p_skip, p_heading = stack.pop()
-                        if p_boiler:
-                            boiler_depth -= 1
-                        if p_skip:
-                            skip_depth -= 1
-                        if p_heading:
-                            heading_depth -= 1
-                    break
+            if stack and stack[-1][0] == tag:
+                _, in_boiler, in_skip, in_heading = stack.pop()
+            else:
+                # Unwind the stack to the nearest matching open tag.
+                for idx in range(len(stack) - 2, -1, -1):
+                    if stack[idx][0] == tag:
+                        _, in_boiler, in_skip, in_heading = stack[idx]
+                        del stack[idx:]
+                        break
             continue
 
-        # Opening tag.
-        if tag in _BLOCK_TAGS:
-            builder.flush()
-            if not self_closing and tag not in ("br", "hr"):
-                builder.set_context(
-                    tag,
-                    heading=(tag in _HEADING_TAGS or heading_depth > 0),
-                    boiler=(is_boiler or boiler_depth > 0),
-                )
-
-        if tag == "a" and not self_closing:
+        if is_skip and tag in _RAW_TEXT_CLOSE:
+            close = _RAW_TEXT_CLOSE[tag].search(html_text, i)
+            i = close.end() if close else n
+            continue
+        if self_closing:
+            continue
+        if tag == "a":
             link_depth += 1
+        stack.append((tag, in_boiler, in_skip, in_heading))
+        if is_boiler:
+            in_boiler = True
+        if is_skip:
+            in_skip = True
+        if is_heading:
+            in_heading = True
 
-        if is_skip and tag in ("script", "style", "textarea", "title"):
-            # Raw-text elements: skip straight to the closing tag.
-            close = lower_text.find(f"</{tag}", i)
-            i = n if close == -1 else html_text.find(">", close) + 1
-            if i == 0:
-                i = n
-            continue
-
-        if not self_closing:
-            if is_boiler:
-                boiler_depth += 1
-            if is_skip:
-                skip_depth += 1
-            if tag in _HEADING_TAGS:
-                heading_depth += 1
-            stack.append((tag, is_boiler, is_skip, tag in _HEADING_TAGS))
-
-    builder.flush()
-    return builder.blocks
+    return blocks
 
 
 def classify(blocks: List[Block]) -> List[Block]:

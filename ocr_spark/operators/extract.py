@@ -185,9 +185,9 @@ def admit(df: DataFrame) -> DataFrame:
     return df.withColumn("kind", payload_kind()).filter(reject_reason().isNull())
 
 
-# scan-strategy task oversubscription: ~4 coalesced tasks per core so
-# wave scheduling absorbs residual per-file byte variance without any
-# payload exchange.
+# scan-strategy cap on the task count: coalesce merges scan partitions
+# down to at most 4 tasks per core and never splits them, so a table
+# with fewer scan partitions than that keeps its own count.
 SCAN_OVERSUB = 4
 
 
@@ -226,8 +226,9 @@ def extract_documents(
     * ``strategy='scan'`` (default) — NO payload exchange: scan
       partitions (already byte-balanced by
       ``spark.sql.files.maxPartitionBytes``) are ``coalesce``d (a
-      narrow, shuffle-free merge) to ``n_partitions`` or
-      SCAN_OVERSUB x defaultParallelism chunky tasks. Extraction runs
+      narrow, shuffle-free merge) to at most ``n_partitions`` or
+      SCAN_OVERSUB x defaultParallelism tasks; coalesce never splits,
+      so fewer scan partitions stay as they are. Extraction runs
       where the bytes already are. Right whenever the source table's
       files are size-balanced — which a crawl table written by any
       sane ingest is. Measured (BASELINE.md round 3): shipping the

@@ -13,8 +13,10 @@ Per-page text joins lines with '\\n'; the document joins pages with
 
 Scope is honest (SURVEY.md §7): flate or plain streams, literal/hex
 strings, standard simple fonts with latin-1-ish byte mapping — the
-profile the corpus generator emits — not arbitrary wild PDFs; anything
-unparseable degrades to skipped objects, never an exception.
+profile the corpus generator emits — not arbitrary wild PDFs. Unparseable
+objects and broken flate streams are skipped. Two things raise, so the
+caller records a failed row: flate output past MAX_INFLATED_BYTES per
+document, and operands of the wrong type for a text operator.
 """
 
 from __future__ import annotations
@@ -39,6 +41,11 @@ _PAGES_REF_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
 _FLATE_RE = re.compile(rb"/Filter\s*/FlateDecode\b")
 
 _LINE_Y_TOLERANCE = 0.5
+
+# Most bytes the flate content streams of one document may inflate to
+# (MAX_PDF_PAGES pages at 128 KiB each). A stream that would pass it
+# raises instead of growing memory without limit.
+MAX_INFLATED_BYTES = 64 * 1024 * 1024
 
 
 def _scan_objects(pdf: bytes) -> Dict[int, Tuple[bytes, Optional[bytes]]]:
@@ -107,9 +114,27 @@ def _page_order(objects: Dict[int, Tuple[bytes, Optional[bytes]]]) -> List[int]:
     return ordered
 
 
+def _inflate(data: bytes, budget: int) -> Optional[bytes]:
+    """Flate-decode ``data``; None unless it is one complete zlib stream
+    (trailing bytes are ignored). Raises ValueError when the output
+    would pass ``budget`` bytes."""
+    inflater = zlib.decompressobj()
+    try:
+        out = inflater.decompress(data, budget + 1)
+    except zlib.error:
+        return None
+    if len(out) > budget:
+        raise ValueError(
+            f"flate output exceeds MAX_INFLATED_BYTES ({MAX_INFLATED_BYTES} per document)"
+        )
+    return out if inflater.eof else None
+
+
 def _content_streams(
-    page_body: bytes, objects: Dict[int, Tuple[bytes, Optional[bytes]]]
-) -> List[bytes]:
+    page_body: bytes, objects: Dict[int, Tuple[bytes, Optional[bytes]]], budget: int
+) -> Tuple[List[bytes], int]:
+    """The page's content streams, flate-decoded, and what is left of
+    the document's inflate ``budget``."""
     refs: List[int] = []
     m = _CONTENTS_RE.search(page_body)
     if m:
@@ -126,12 +151,12 @@ def _content_streams(
         if data is None:
             continue
         if _FLATE_RE.search(body):
-            try:
-                data = zlib.decompress(data)
-            except zlib.error:
+            data = _inflate(data, budget)
+            if data is None:
                 continue
+            budget -= len(data)
         streams.append(data)
-    return streams
+    return streams, budget
 
 
 _ESCAPES = {
@@ -217,138 +242,134 @@ def _parse_hex_string(data: bytes, i: int) -> Tuple[str, int]:
     return raw.decode("latin-1"), end + 1
 
 
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-_OP_RE = re.compile(rb"[A-Za-z'\"*]+")
+# One content-stream token after optional whitespace. Groups, as
+# m.lastindex: 1 a literal string with no escape or nested paren (its
+# body), 2 any other literal string, 3 a dictionary, 4 a hex string,
+# 5 an array, 6 a name, 7 a number, 8 an operator. A comment or any
+# other byte matches with no group and is skipped.
+_NUM = rb"[+-]?(?:\d+\.?\d*|\.\d+)"
+_TOKEN_RE = re.compile(
+    rb"[ \t\r\n\x00]*(?:\(([^\\()]*)\)|(\()|(<<)|(<)|(\[)"
+    rb"|(/[^\s()<>\[\]{}/%]*)|(" + _NUM + rb")|([A-Za-z'\"*]+)|%[^\n]*\n?|.)",
+    re.S,
+)
+# One array element: 1 the closing ']' or the end of input, 2-4 as
+# groups 1, 2 and 4 of _TOKEN_RE, 5 a number. Any other byte is skipped.
+_ARRAY_ITEM_RE = re.compile(
+    rb"[ \t\r\n\x00]*(?:(\]|\Z)|\(([^\\()]*)\)|(\()|(<)|(" + _NUM + rb")|.)", re.S
+)
+_DICT_DELIM_RE = re.compile(rb"<<|>>")
 
 
-def _tokenize_content(data: bytes):
-    """Yield ('str', text) | ('num', float) | ('op', name) | ('arr', list)."""
-    i, n = 0, len(data)
-    while i < n:
-        c = data[i]
-        if c in b" \t\r\n\x00":
-            i += 1
-        elif c == 0x28:  # (
-            s, i = _parse_literal_string(data, i)
-            yield ("str", s)
-        elif c == 0x3C:  # <
-            if i + 1 < n and data[i + 1] == 0x3C:  # << dict — skip to >>
-                depth = 1
-                i += 2
-                while i < n and depth:
-                    if data.startswith(b"<<", i):
-                        depth += 1
-                        i += 2
-                    elif data.startswith(b">>", i):
-                        depth -= 1
-                        i += 2
-                    else:
-                        i += 1
-            else:
-                s, i = _parse_hex_string(data, i)
-                yield ("str", s)
-        elif c == 0x5B:  # [
-            arr: List = []
-            i += 1
-            while i < n and data[i] != 0x5D:
-                if data[i] in b" \t\r\n":
-                    i += 1
-                elif data[i] == 0x28:
-                    s, i = _parse_literal_string(data, i)
-                    arr.append(("str", s))
-                elif data[i] == 0x3C:
-                    s, i = _parse_hex_string(data, i)
-                    arr.append(("str", s))
-                else:
-                    m = _NUM_RE.match(data, i)
-                    if m:
-                        arr.append(("num", float(m.group(0))))
-                        i = m.end()
-                    else:
-                        i += 1
-            i += 1
-            yield ("arr", arr)
-        elif c == 0x2F:  # /Name
-            m = re.compile(rb"/[^\s()<>\[\]{}/%]*").match(data, i)
-            i = m.end() if m else i + 1
-            yield ("name", data[m.start() : m.end()].decode("latin-1") if m else "/")
-        elif c == 0x25:  # % comment
-            nl = data.find(b"\n", i)
-            i = n if nl == -1 else nl + 1
-        else:
-            m = _NUM_RE.match(data, i)
-            if m:
-                yield ("num", float(m.group(0)))
-                i = m.end()
-                continue
-            m = _OP_RE.match(data, i)
-            if m:
-                yield ("op", m.group(0).decode("latin-1"))
-                i = m.end()
-            else:
-                i += 1
+def _skip_dict(data: bytes, i: int) -> int:
+    """Index just past the ``>>`` closing a ``<<`` dictionary whose body
+    starts at ``i`` (nested dictionaries included), or the end."""
+    depth = 1
+    while depth:
+        m = _DICT_DELIM_RE.search(data, i)
+        if m is None:
+            return len(data)
+        depth += 1 if m[0] == b"<<" else -1
+        i = m.end()
+    return i
 
 
 def _extract_runs(stream: bytes) -> List[Tuple[float, float, str]]:
-    """Text runs (x, y, text) from one content stream."""
+    """Text runs (x, y, text) from one content stream.
+
+    Operands go on a stack as (kind, value) pairs, kind being 'str',
+    'num', 'arr' or 'name'; every operator reads the stack and clears it.
+    """
     runs: List[Tuple[float, float, str]] = []
     stack: List = []
+    push = stack.append
     # Text line matrix origin (tx, ty) — full matrix not needed for the
     # translate/scale-free transforms the corpus profile uses.
     lx = ly = 0.0
     cx = cy = 0.0
     leading = 0.0
     in_text = False
+    token = _TOKEN_RE.match
+    i = 0
 
-    for kind, value in _tokenize_content(stream):
-        if kind in ("str", "num", "arr", "name"):
-            stack.append((kind, value))
-            continue
-        op = value
-        try:
-            if op == "BT":
-                in_text = True
-                lx = ly = cx = cy = 0.0
-            elif op == "ET":
-                in_text = False
-            elif op in ("Td", "TD"):
+    while True:
+        m = token(stream, i)
+        if m is None:
+            break
+        i = m.end()
+        kind = m.lastindex
+        if kind == 8:
+            op = m[8]
+            if op == b"Tj":
+                if in_text and stack and stack[-1][0] == "str":
+                    runs.append((cx, cy, stack[-1][1]))
+            elif op == b"Td" or op == b"TD":
                 ty = stack[-1][1] if stack else 0.0
                 tx = stack[-2][1] if len(stack) > 1 else 0.0
                 lx += tx
                 ly += ty
                 cx, cy = lx, ly
-                if op == "TD":
+                if op == b"TD":
                     leading = -ty
-            elif op == "Tm":
+            elif op == b"T*":
+                ly -= leading
+                cx, cy = lx, ly
+            elif op == b"Tm":
                 if len(stack) >= 2:
                     ly = stack[-1][1]
                     lx = stack[-2][1]
                 cx, cy = lx, ly
-            elif op == "T*":
-                ly -= leading
-                cx, cy = lx, ly
-            elif op == "TL":
-                leading = stack[-1][1] if stack else 0.0
-            elif op == "Tj":
-                if in_text and stack and stack[-1][0] == "str":
-                    runs.append((cx, cy, stack[-1][1]))
-            elif op == "'":
-                ly -= leading
-                cx, cy = lx, ly
-                if in_text and stack and stack[-1][0] == "str":
-                    runs.append((cx, cy, stack[-1][1]))
-            elif op == '"':
-                ly -= leading
-                cx, cy = lx, ly
-                if in_text and stack and stack[-1][0] == "str":
-                    runs.append((cx, cy, stack[-1][1]))
-            elif op == "TJ":
+            elif op == b"TJ":
                 if in_text and stack and stack[-1][0] == "arr":
                     text = "".join(v for k, v in stack[-1][1] if k == "str")
                     if text:
                         runs.append((cx, cy, text))
-        finally:
+            elif op == b"BT":
+                in_text = True
+                lx = ly = cx = cy = 0.0
+            elif op == b"ET":
+                in_text = False
+            elif op == b"TL":
+                leading = stack[-1][1] if stack else 0.0
+            elif op == b"'" or op == b'"':
+                ly -= leading
+                cx, cy = lx, ly
+                if in_text and stack and stack[-1][0] == "str":
+                    runs.append((cx, cy, stack[-1][1]))
             stack.clear()
+        elif kind == 7:
+            push(("num", float(m[7])))
+        elif kind == 1:
+            push(("str", m[1].decode("latin-1")))
+        elif kind == 5:
+            arr: List = []
+            while True:
+                item = _ARRAY_ITEM_RE.match(stream, i)
+                i = item.end()
+                k = item.lastindex
+                if k == 1:
+                    break
+                if k == 2:
+                    arr.append(("str", item[2].decode("latin-1")))
+                elif k == 3:
+                    s, i = _parse_literal_string(stream, item.start(3))
+                    arr.append(("str", s))
+                elif k == 4:
+                    s, i = _parse_hex_string(stream, item.start(4))
+                    arr.append(("str", s))
+                elif k == 5:
+                    arr.append(("num", float(item[5])))
+            push(("arr", arr))
+        elif kind == 6:
+            push(("name", m[6].decode("latin-1")))
+        elif kind == 2:
+            s, i = _parse_literal_string(stream, m.start(2))
+            push(("str", s))
+        elif kind == 4:
+            s, i = _parse_hex_string(stream, m.start(4))
+            push(("str", s))
+        elif kind == 3:
+            i = _skip_dict(stream, i)
     return runs
 
 
@@ -385,11 +406,13 @@ def pdf_page_count(pdf: bytes) -> int:
 def pdf_extract_pages(pdf: bytes) -> List[str]:
     """Per-page extracted text, in document page order."""
     objects = _scan_objects(pdf)
+    budget = MAX_INFLATED_BYTES
     pages = []
     for page_num in _page_order(objects):
         body, _ = objects[page_num]
         runs: List[Tuple[float, float, str]] = []
-        for stream in _content_streams(body, objects):
+        streams, budget = _content_streams(body, objects, budget)
+        for stream in streams:
             runs.extend(_extract_runs(stream))
         pages.append(_runs_to_text(runs))
     return pages

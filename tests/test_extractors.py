@@ -94,11 +94,46 @@ class TestHtmlExtract:
         html = "<body><p>数据 管道 提取 引擎 分析</p></body>".encode("utf-8")
         assert html_extract(html).text == "数据 管道 提取 引擎 分析"
 
+    def test_raw_text_skip_keeps_content_after_length_changing_lowercase(self):
+        # 'İ'.lower() is two characters; the raw-text skip must still find
+        # </script> in the original string.
+        for ch in ("İ", "I"):
+            html = (
+                "<p>" + ch * 40 + " istanbul</p><script>var x = 1;</script>"
+                "<p>Main content words here.</p><p>Second paragraph of text.</p>"
+            )
+            assert html_extract(html.encode("utf-8")).text == (
+                ch * 40 + " istanbul\n\nMain content words here."
+                "\n\nSecond paragraph of text."
+            )
+
+    def test_raw_text_close_tag_any_case(self):
+        html = b"<p>before the script</p><SCRIPT>x<p>no</p></ScRiPt ><p>after the script</p>"
+        assert html_extract(html).text == "before the script\n\nafter the script"
+
     def test_block_count_metrics(self):
         html = b"<body><nav><a href='/'>Home</a></nav><p>content words here</p></body>"
         out = html_extract(html)
         assert out.metrics["n_content_blocks"] == 1
         assert out.metrics["n_boiler_blocks"] >= 1
+
+
+def _flate_pdf(streams):
+    """A PDF with one page per flate-compressed content stream."""
+    n = len(streams)
+    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n))
+    out = (
+        b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        + f"2 0 obj\n<< /Type /Pages /Kids [{kids}] /Count {n} >>\nendobj\n".encode()
+    )
+    for i, comp in enumerate(streams):
+        page, content = 3 + 2 * i, 4 + 2 * i
+        out += (
+            f"{page} 0 obj\n<< /Type /Page /Parent 2 0 R /Contents {content} 0 R >>\n"
+            f"endobj\n{content} 0 obj\n<< /Length {len(comp)} /Filter /FlateDecode >>\n"
+            "stream\n"
+        ).encode() + comp + b"\nendstream\nendobj\n"
+    return out
 
 
 class TestPdfExtract:
@@ -143,6 +178,40 @@ class TestPdfExtract:
             + b"\nendstream\nendobj\n"
         )
         assert pdf_extract(pdf).text == "a (b) c\\d"
+
+    def test_flate_bomb_fails_at_inflate_budget(self, monkeypatch):
+        import zlib
+
+        from ocr_spark import pdf_extract as pdf_module
+        from ocr_spark.operators.extract import _extract
+
+        monkeypatch.setattr(pdf_module, "MAX_INFLATED_BYTES", 1 << 20)
+        bomb = zlib.compress(b"BT (a) Tj ET " + b" " * (4 << 20), 9)
+        pdf = _flate_pdf([bomb])
+        assert len(pdf) < 16 << 10
+        with pytest.raises(ValueError, match="MAX_INFLATED_BYTES"):
+            pdf_extract_pages(pdf)
+        kind, status, error, pages, out = _extract(pdf)
+        assert (kind, status, pages, out) == ("pdf", "failed", [], None)
+        assert "MAX_INFLATED_BYTES" in error
+
+    def test_inflate_budget_is_per_document(self, monkeypatch):
+        import zlib
+
+        from ocr_spark import pdf_extract as pdf_module
+
+        monkeypatch.setattr(pdf_module, "MAX_INFLATED_BYTES", 1 << 20)
+        stream = zlib.compress(b"BT (a) Tj ET " + b" " * (600 << 10))
+        assert pdf_extract_pages(_flate_pdf([stream])) == ["a"]
+        with pytest.raises(ValueError, match="MAX_INFLATED_BYTES"):
+            pdf_extract_pages(_flate_pdf([stream, stream]))
+
+    def test_broken_flate_stream_skipped(self):
+        import zlib
+
+        good = zlib.compress(b"BT (kept) Tj ET")
+        truncated = zlib.compress(b"BT (lost) Tj ET")[:-4]
+        assert pdf_extract_pages(_flate_pdf([truncated, good + b"trailing"])) == ["", "kept"]
 
     def test_garbage_returns_empty(self):
         assert pdf_extract(b"%PDF-1.4 garbage").text == ""
