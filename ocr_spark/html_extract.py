@@ -195,18 +195,17 @@ def tokenize_blocks(html_text: str) -> List[Block]:
                     link_chars += stripped_len
                 if in_boiler:
                     block_boiler = True
+        i = m.end()
         kind = m.lastindex
+        if kind == 2:  # comment or declaration
+            continue
         if kind == 3:
-            i = m.end()
             raw_tag = m[3]
             parsed = cache_get(raw_tag, False)
             if parsed is False:
                 parsed = _parse_tag(raw_tag)
             if parsed is None:
                 continue
-        elif kind == 2:
-            i = m.end()
-            continue
         else:
             parsed = _END_OF_INPUT
             i = n + 1
