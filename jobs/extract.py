@@ -15,11 +15,15 @@ Usage (sandbox smoke):
     python3 jobs/extract.py --input /tmp/docs.parquet \
         --output /tmp/out --lineage /tmp/lineage --buckets 64
 
-The job is idempotent and resumable: every run anti-joins the input's
-url-hash buckets against the lineage table's ``status='done'`` rows
-and processes only what's missing; output is partitioned by bucket
-with dynamic overwrite, so a rerun replaces exactly the buckets it
-recomputes (ocr_spark.plans.lineage).
+The job is idempotent and resumable: every run skips the url-hash
+buckets whose latest lineage row is ``status='done'`` and processes
+only the rest; output is partitioned by bucket with dynamic overwrite,
+so a rerun replaces exactly the buckets it recomputes
+(ocr_spark.plans.lineage). A rerun must use the ``--buckets`` the
+lineage was written with; another count is refused. To re-verify a
+finished output, call ``plans.lineage.audit_buckets``: it marks every
+bucket whose output no longer matches its lineage ``stale``, and the
+next run of this job redoes exactly those buckets.
 """
 
 from __future__ import annotations

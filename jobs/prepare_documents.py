@@ -16,9 +16,9 @@ report — keys on the reference-shaped `documents` table instead:
     n_chars BIGINT   length(text)
 
 Only successfully extracted, non-empty docs survive: failed/cancelled
-rows stay in the extraction output + lineage table where the repair
-pass (plans.lineage.repair_empty) finds them; shipping them into the
-corpus tables would poison every text-keyed stage.
+rows stay in the extraction output, counted per bucket in the lineage
+table (plans.lineage); shipping them into the corpus tables would
+poison every text-keyed stage.
 
 Pure column expressions — one narrow scan, zero shuffles, no Python.
 

@@ -394,15 +394,6 @@ def _runs_to_text(runs: List[Tuple[float, float, str]]) -> str:
     return "\n".join(out_lines)
 
 
-def pdf_page_count(pdf: bytes) -> int:
-    """Page count probe — the admission-control analog of the
-    reference's check_pdf_info (main.py:571-588)."""
-    try:
-        return len(_page_order(_scan_objects(pdf)))
-    except Exception:
-        return 0
-
-
 def pdf_extract_pages(pdf: bytes) -> List[str]:
     """Per-page extracted text, in document page order."""
     objects = _scan_objects(pdf)

@@ -1,21 +1,26 @@
 """Per-bucket lineage, metrics and resume — the engine's checkpointing.
 
 Replaces the reference's page-granular SQLite state machine
-(/root/reference/models/database.py:322-342 page_results;
+(reference models/database.py:322-342 page_results;
 core/recovery_manager.py:270-334 checkpoints) with partition-granular
 lineage rows (FIXTURES.md §3): each url-hash *bucket* that finishes
-extraction appends one row ``(run_id, bucket, status, n_docs, n_ok,
-n_failed, bytes_in, chars_out, wall_ms, finished_at, content_hash)``
-to a lineage table; a rerun anti-joins the input's buckets against
-``status='done'`` lineage and processes only what's missing (the
-reference's restore-on-boot, task_queue.py:369-443, which *fails*
-interrupted tasks because the upload bytes are gone — here the source
-table is durable, so resume is true resume).
+extraction appends one row ``(run_id, bucket, n_buckets, status,
+n_docs, n_ok, n_failed, bytes_in, chars_out, max_doc_ms, finished_at,
+content_hash)`` to a lineage table. A bucket is done when its latest
+row by ``finished_at`` says ``status='done'``; a rerun processes only
+the buckets that are not done (the reference's restore-on-boot,
+task_queue.py:369-443, which *fails* interrupted tasks because the
+upload bytes are gone — here the source table is durable, so resume is
+true resume). ``n_buckets`` is the url-hash modulus the row was
+written under: a rerun under another modulus would file urls in other
+buckets, so it is refused.
 
 ``content_hash`` is sha256 over the bucket's sorted per-url text
 hashes (reference integrity hashing, recovery_manager.py:288-290),
 computed with built-in functions so it stays JVM-side; it matches
-``textops.content_hash_of`` byte-for-byte.
+``textops.content_hash_of`` byte-for-byte. ``audit_buckets`` recomputes
+it and the counts from the output; a done bucket that no longer matches
+gets a ``status='stale'`` row, so the next run redoes it.
 
 Output layout: parquet partitioned by ``bucket``, one file per bucket
 per run (one task writes each bucket) — idempotent on resume (a
@@ -27,45 +32,44 @@ database.py:860-869).
 from __future__ import annotations
 
 import uuid
+from datetime import datetime, timezone
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import url_bucket
 from .fs import hadoop_fs
-from ..operators.extract import EXTRACT_SCHEMA, admit, extract_batch, extract_documents
+from ..operators.extract import EXTRACT_SCHEMA, admit, extract_batch
 
 LINEAGE_SCHEMA = (
-    "run_id string, bucket int, status string, n_docs bigint, n_ok bigint, "
-    "n_failed bigint, bytes_in bigint, chars_out bigint, wall_ms bigint, "
-    "finished_at timestamp, content_hash string"
+    "run_id string, bucket int, n_buckets int, status string, n_docs bigint, "
+    "n_ok bigint, n_failed bigint, bytes_in bigint, chars_out bigint, "
+    "max_doc_ms bigint, finished_at timestamp, content_hash string"
 )
 
 DEFAULT_N_BUCKETS = 64
 
+_LINEAGE_COLUMNS = [c.split()[0] for c in LINEAGE_SCHEMA.split(", ")]
 
-_LINEAGE_COLUMNS = [
-    "run_id",
-    "bucket",
-    "status",
-    "n_docs",
-    "n_ok",
-    "n_failed",
-    "bytes_in",
-    "chars_out",
-    "wall_ms",
-    "finished_at",
-    "content_hash",
-]
+# The output columns lineage is computed from: a run re-reads them for
+# the buckets it wrote, the audit for the buckets lineage calls done.
+_OUTPUT_METADATA = (
+    "bucket int, status string, bytes_in bigint, chars_out bigint, "
+    "elapsed_us bigint, content_hash string"
+)
+
+# What the audit compares. Per-document times, finished_at and run_id
+# differ between two runs over the same bytes.
+_AUDITED = ("n_docs", "n_ok", "n_failed", "bytes_in", "chars_out", "content_hash")
 
 
-def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
+def lineage_rows(extracted: DataFrame, run_id: str, n_buckets: int) -> DataFrame:
     """Aggregate per-doc extraction rows (already carrying ``bucket``)
     into one lineage row per bucket. All built-ins — no Python."""
     agg = extracted.groupBy("bucket").agg(
         F.lit(run_id).alias("run_id"),
+        F.lit(n_buckets).alias("n_buckets"),
         F.lit("done").alias("status"),
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("status") == "completed", 1).otherwise(0)).alias("n_ok"),
@@ -74,7 +78,7 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
         ),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("chars_out").alias("chars_out"),
-        (F.max("elapsed_us") / F.lit(1000)).cast("bigint").alias("wall_ms"),
+        (F.max("elapsed_us") / F.lit(1000)).cast("bigint").alias("max_doc_ms"),
         F.current_timestamp().alias("finished_at"),
         F.sha2(
             F.concat(
@@ -92,30 +96,49 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     return agg.select(*_LINEAGE_COLUMNS)
 
 
-def done_buckets(spark: SparkSession, lineage_path: str) -> Optional[list]:
-    """Sorted bucket ids already completed by any prior run, or None if
-    no lineage exists yet.
+def _latest_rows(spark: SparkSession, lineage_path: str) -> list:
+    """The latest lineage row of every bucket, by ``finished_at``.
 
-    Collected to the driver on purpose: the done-set is tiny (≤ the
-    bucket count) and materializing it FREEZES resume state at plan
-    time — a lazy read of the lineage table here would be re-evaluated
-    by later actions in the same job, after this run has appended its
-    own lineage rows, silently emptying the pending set. A missing
-    path is checked for, not read (a failed read logs a Java stack
-    trace); a directory with no parquet file yet (a first run killed
-    in its lineage append) also counts as no lineage.
+    Collected to the driver on purpose: the rows are tiny (≤ the bucket
+    count) and materializing them FREEZES resume state at plan time — a
+    lazy read of the lineage table here would be re-evaluated by later
+    actions in the same job, after this run has appended its own
+    lineage rows, silently emptying the pending set. A missing path is
+    checked for, not read (a failed read logs a Java stack trace). The
+    read names its schema, so a directory with no parquet file yet (a
+    first run killed in its lineage append) reads as no rows.
     """
     fs, Path = hadoop_fs(spark, lineage_path)
     if not fs.exists(Path(lineage_path)):
-        return None
-    try:
-        lineage = spark.read.parquet(lineage_path)
-    except AnalysisException:
-        return None
-    rows = (
-        lineage.filter(F.col("status") == "done").select("bucket").distinct().collect()
+        return []
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    latest = lineage.groupBy("bucket").agg(
+        F.max_by(F.struct(*_LINEAGE_COLUMNS), "finished_at").alias("row")
     )
-    return sorted(r.bucket for r in rows)
+    return [r.row for r in latest.collect()]
+
+
+def done_buckets(spark: SparkSession, lineage_path: str) -> list:
+    """Sorted ids of the buckets whose latest lineage row is ``done``
+    (see _latest_rows); empty if no lineage exists yet."""
+    latest = _latest_rows(spark, lineage_path)
+    return sorted(r.bucket for r in latest if r.status == "done")
+
+
+def _resume_done(spark: SparkSession, lineage_path: str, n_buckets: int) -> list:
+    """done_buckets for a run under ``n_buckets``. Raises ValueError if
+    the lineage was written under another bucket count: its bucket ids
+    name other sets of urls, so resuming would duplicate some documents
+    and skip others. Rows written before lineage recorded the count
+    carry null and are not checked."""
+    latest = _latest_rows(spark, lineage_path)
+    recorded = sorted({r.n_buckets for r in latest} - {None, n_buckets})
+    if recorded:
+        raise ValueError(
+            f"lineage at {lineage_path} was written with n_buckets="
+            f"{', '.join(map(str, recorded))}; this run asks for n_buckets={n_buckets}"
+        )
+    return sorted(r.bucket for r in latest if r.status == "done")
 
 
 # Above this many done buckets, prefer a broadcast anti-join over an
@@ -128,7 +151,7 @@ ISIN_MAX_BUCKETS = 10_000
 def _filter_not_in_buckets(
     spark: SparkSession,
     df: DataFrame,
-    done: Optional[list],
+    done: list,
 ) -> DataFrame:
     """Rows of ``df`` (carrying a ``bucket`` column) whose bucket is
     not in ``done``. Up to ISIN_MAX_BUCKETS done ids this is a plain
@@ -148,11 +171,12 @@ def pending_after_resume(
     lineage_path: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Input rows whose bucket has no 'done' lineage row (see
+    """Input rows whose bucket is not done (see
     _filter_not_in_buckets), the done-set snapshotted at call time
-    (see done_buckets)."""
+    (see _latest_rows). Raises ValueError if the lineage was written
+    under another ``n_buckets``."""
     with_bucket = input_df.withColumn("bucket", url_bucket(n_buckets))
-    done = done_buckets(spark, lineage_path)
+    done = _resume_done(spark, lineage_path, n_buckets)
     return _filter_not_in_buckets(spark, with_bucket, done)
 
 
@@ -174,12 +198,14 @@ def run_pipeline(
     (default spark.sql.shuffle.partitions) capped at ``n_buckets``;
     AQE does not coalesce it.
 
-    Returns a small summary dict (counts only — no data collected).
+    Raises ValueError if the lineage was written under another
+    ``n_buckets``. Returns a small summary dict (counts only — no data
+    collected).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     docs = spark.read.parquet(input_path)
     with_bucket = docs.withColumn("bucket", url_bucket(n_buckets))
-    done = done_buckets(spark, lineage_path)
+    done = _resume_done(spark, lineage_path, n_buckets)
     pending = _filter_not_in_buckets(spark, with_bucket, done)
 
     if pending.isEmpty():
@@ -210,10 +236,10 @@ def run_pipeline(
         .parquet(output_path)
     )
     written = _filter_not_in_buckets(
-        spark, spark.read.parquet(output_path), done
-    ).select("bucket", "status", "bytes_in", "chars_out", "elapsed_us", "content_hash")
+        spark, spark.read.schema(_OUTPUT_METADATA).parquet(output_path), done
+    )
     # Collected lineage rows are ≤ n_buckets — bounded and tiny.
-    lineage_local = lineage_rows(written, run_id).collect()
+    lineage_local = lineage_rows(written, run_id, n_buckets).collect()
     spark.createDataFrame(lineage_local, schema=LINEAGE_SCHEMA).write.mode(
         "append"
     ).parquet(lineage_path)
@@ -222,132 +248,52 @@ def run_pipeline(
     return {"run_id": run_id, "buckets_processed": n_buckets_done, "docs": n_docs}
 
 
-REPAIR_STAGING = "_repair_staging"
-# No '=' in the trash name: Spark's hidden-path filter skips '_'/'.'
-# prefixed names EXCEPT those containing '=' (partition values may
-# start with an underscore), so '_repair_old_bucket=3' would be
-# partition-inferred and conflict with 'bucket='.
-REPAIR_TRASH_PREFIX = "_repair_old_b"
+def audit_buckets(
+    spark: SparkSession, output_path: str, lineage_path: str
+) -> list:
+    """Re-verify every done bucket against the output it left; returns
+    the sorted ids of the buckets that no longer match.
 
+    The output's metadata columns, pruned to the done buckets, go
+    through the same ``lineage_rows`` aggregate a run uses, and each
+    bucket's counts and ``content_hash`` are compared with its latest
+    lineage row. The comparison trusts the per-document
+    ``content_hash`` column; it does not rehash the text. A bucket that
+    disagrees, or whose directory is gone, gets a ``status='stale'`` row
+    with zero counts (every lineage sum stays the same) and the
+    ``content_hash`` found, null if none. It is then no longer done, so
+    the next ``run_pipeline`` redoes exactly these buckets.
 
-def _swap_repair_buckets(
-    spark: SparkSession, output_path: str, buckets: list
-) -> None:
-    """Swap staged bucket directories into place, bucket-atomically.
-
-    Per bucket: rename live -> trash, rename staged -> live, delete
-    trash. Each rename is a single metadata operation (atomic on
-    local/HDFS; object stores need an Iceberg/table-format commit
-    instead — documented limitation). A kill between the two renames
-    leaves a ``_repair_old_bucket=N`` dir that ``recover_repair`` rolls
-    forward or back; both trash and staging start with '_' so Spark's
-    partition discovery never sees half a swap.
+    Reads the metadata of every done bucket, so it is a call of its
+    own, like ``output_is_complete``, not a step of every run.
     """
+    latest = _latest_rows(spark, lineage_path)
+    done = {r.bucket: r for r in latest if r.status == "done"}
+    found = {}
     fs, Path = hadoop_fs(spark, output_path)
-    for b in buckets:
-        live = Path(f"{output_path}/bucket={b}")
-        trash = Path(f"{output_path}/{REPAIR_TRASH_PREFIX}{b}")
-        staged = Path(f"{output_path}/{REPAIR_STAGING}/bucket={b}")
-        if not fs.exists(staged):
-            continue
-        if fs.exists(live):
-            fs.rename(live, trash)
-        fs.rename(staged, live)
-        fs.delete(trash, True)
-    fs.delete(Path(f"{output_path}/{REPAIR_STAGING}"), True)
-
-
-def recover_repair(spark: SparkSession, output_path: str) -> int:
-    """Make ``output_path`` consistent after a kill during a repair
-    swap: for every ``_repair_old_bucket=N`` trash dir, roll the bucket
-    forward (staged copy exists) or back (it doesn't); stale staging is
-    discarded. Buckets whose swap never started keep their old data —
-    bucket-granular atomicity, the same unit as resume. Returns the
-    number of buckets recovered. Idempotent; safe to run at every job
-    start."""
-    fs, Path = hadoop_fs(spark, output_path)
-    root = Path(output_path)
-    if not fs.exists(root):
-        return 0
-    fixed = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith(REPAIR_TRASH_PREFIX):
-            continue
-        b = name[len(REPAIR_TRASH_PREFIX):]
-        live = Path(f"{output_path}/bucket={b}")
-        staged = Path(f"{output_path}/{REPAIR_STAGING}/bucket={b}")
-        if fs.exists(live):
-            pass  # swap completed; trash is leftover
-        elif fs.exists(staged):
-            fs.rename(staged, live)  # roll forward
-        else:
-            fs.rename(st.getPath(), live)  # roll back
-        fs.delete(st.getPath(), True)
-        fixed += 1
-    fs.delete(Path(f"{output_path}/{REPAIR_STAGING}"), True)
-    return fixed
-
-
-def repair_empty(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    n_partitions: Optional[int] = None,
-) -> int:
-    """R5, the empty-content repair pass (reference
-    task_manager.py:1298-1349: pages 'completed' with empty content are
-    re-OCR'd after task completion): re-extract exactly the documents
-    whose output is completed-but-empty and patch their buckets.
-
-    The target set is found by a filter on the *output* table (no scan
-    of the input beyond a broadcast semi-join on the tiny url list).
-    The patch is written to a ``_repair_staging`` dir under the output
-    (never read by partition discovery — leading underscore), then each
-    affected bucket directory is swapped in atomically
-    (``_swap_repair_buckets``): a reader or a kill at any moment sees
-    each bucket fully old or fully new, never mixed, and no repair data
-    ever sits in executor memory the way the previous
-    localCheckpoint-then-overwrite did. Returns the number of documents
-    re-extracted.
-    """
-    recover_repair(spark, output_path)  # heal any interrupted repair
-    out = spark.read.parquet(output_path)
-    targets = out.filter(
-        (F.col("status") == "completed") & (F.col("chars_out") == 0)
-    ).select("url", "bucket")
-    n_targets = targets.count()
-    if n_targets == 0:
-        return 0
-
-    docs = spark.read.parquet(input_path)
-    todo = docs.join(F.broadcast(targets.select("url")), "url", "left_semi")
-    # Reuse the STORED bucket of each target row rather than recomputing
-    # url_bucket: inferring the bucket count as max(bucket)+1 is wrong
-    # whenever the top buckets happen to be empty (near-certain with
-    # large --buckets on modest inputs), and a mismatched modulus would
-    # re-assign redone rows to different buckets — the swap would then
-    # replace unrelated bucket directories with only the redone rows
-    # (silent data loss).
-    redone = extract_documents(todo, n_partitions=n_partitions).join(
-        F.broadcast(targets), "url"
+    if done and fs.exists(Path(output_path)):
+        written = (
+            spark.read.schema(_OUTPUT_METADATA)
+            .parquet(output_path)
+            .filter(F.col("bucket").isin(list(done)))
+        )
+        found = {r.bucket: r for r in lineage_rows(written, "audit", 0).collect()}
+    stale = sorted(
+        b
+        for b, row in done.items()
+        if b not in found or any(row[c] != found[b][c] for c in _AUDITED)
     )
-    # Patch = union of untouched rows in the affected buckets + the
-    # re-extracted rows. Writing to staging reads the live output and
-    # writes elsewhere — no read-from-overwritten-path hazard, no
-    # materialization of kept rows.
-    affected = [r.bucket for r in targets.select("bucket").distinct().collect()]
-    keep = out.filter(F.col("bucket").isin(affected)).join(
-        F.broadcast(targets.select("url")), "url", "left_anti"
-    )
-    patched = keep.unionByName(redone)
-    (
-        patched.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{output_path}/{REPAIR_STAGING}")
-    )
-    _swap_repair_buckets(spark, output_path, affected)
-    return n_targets
+    if stale:
+        run_id, now = uuid.uuid4().hex[:12], datetime.now(timezone.utc)
+        marks = [
+            (run_id, b, done[b].n_buckets, "stale", 0, 0, 0, 0, 0, None, now,
+             found[b].content_hash if b in found else None)
+            for b in stale
+        ]
+        spark.createDataFrame(marks, LINEAGE_SCHEMA).write.mode("append").parquet(
+            lineage_path
+        )
+    return stale
 
 
 def output_is_complete(

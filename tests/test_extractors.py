@@ -8,7 +8,7 @@ import pytest
 
 from ocr_spark import corpus
 from ocr_spark.html_extract import html_extract, tokenize_blocks
-from ocr_spark.pdf_extract import pdf_extract, pdf_extract_pages, pdf_page_count
+from ocr_spark.pdf_extract import pdf_extract, pdf_extract_pages
 
 
 class TestHtmlExtract:
@@ -149,11 +149,6 @@ class TestPdfExtract:
         assert out.text == truth
         assert out.metrics["n_pages"] == 4
 
-    def test_page_count(self):
-        rng = random.Random(3)
-        pdf, _ = corpus.make_pdf(rng, n_pages=3)
-        assert pdf_page_count(pdf) == 3
-
     def test_pages_in_order(self):
         rng = random.Random(5)
         pdf, truth = corpus.make_pdf(rng, n_pages=2)
@@ -215,7 +210,6 @@ class TestPdfExtract:
 
     def test_garbage_returns_empty(self):
         assert pdf_extract(b"%PDF-1.4 garbage").text == ""
-        assert pdf_page_count(b"not a pdf") == 0
 
     def test_many_seeds_roundtrip(self):
         for seed in range(40):

@@ -9,14 +9,26 @@ import pytest
 from ocr_spark import textops
 from ocr_spark.functions import url_bucket
 from ocr_spark.operators import extract_documents
-from ocr_spark.plans import pending_after_resume, run_pipeline
+from ocr_spark.plans import (
+    LINEAGE_SCHEMA,
+    audit_buckets,
+    pending_after_resume,
+    run_pipeline,
+)
 from ocr_spark.plans.lineage import (
     ISIN_MAX_BUCKETS,
     _filter_not_in_buckets,
+    done_buckets,
     output_is_complete,
 )
 
 N_BUCKETS = 16
+
+# Completes with no text: every block is boilerplate.
+NAV_ONLY = (
+    b'<html><body><nav><a href="/">Home</a> <a href="/about">About</a></nav>'
+    b"</body></html>"
+)
 
 
 @pytest.fixture()
@@ -133,9 +145,9 @@ class TestRunPipeline:
         column-pruned re-read of the written parquet instead.
 
         Delta-based: the suite shares one session and other tests
-        legitimately leave cached RDDs behind (localCheckpoint in the
-        repair pass, streaming state), so assert run_pipeline ADDS no
-        cached RDD rather than that storage is globally empty."""
+        legitimately leave cached RDDs behind (streaming state), so
+        assert run_pipeline ADDS no cached RDD rather than that storage
+        is globally empty."""
         sc = spark.sparkContext._jsc.sc()
         before = {s.id() for s in sc.getRDDStorageInfo()}
         run_pipeline(
@@ -245,6 +257,31 @@ class TestRunPipeline:
         assert agg.ok == 300
         assert agg.bytes > 0 and agg.chars > 0
 
+    def test_rerun_under_other_bucket_count_refused(self, spark, corpus_path, paths):
+        """Lineage records the url-hash modulus. A resume under another
+        bucket count would file urls in other buckets, duplicating some
+        documents and skipping others, so it raises before any work;
+        the resume under the recorded count completes the output."""
+        docs = spark.read.parquet(corpus_path)
+        half = paths["output"] + "_in1"
+        docs.withColumn("bucket", url_bucket(8)).filter(F.col("bucket") < 4).drop(
+            "bucket"
+        ).write.parquet(half)
+        run_pipeline(spark, half, paths["output"], paths["lineage"], n_buckets=8)
+        for n in (16, 4):
+            refused = rf"n_buckets=8\b.*n_buckets={n}\b"
+            with pytest.raises(ValueError, match=refused):
+                run_pipeline(
+                    spark, corpus_path, paths["output"], paths["lineage"], n_buckets=n
+                )
+            with pytest.raises(ValueError, match=refused):
+                pending_after_resume(spark, docs, paths["lineage"], n_buckets=n)
+        summary = run_pipeline(
+            spark, corpus_path, paths["output"], paths["lineage"], n_buckets=8
+        )
+        assert 0 < summary["docs"] < 300
+        assert output_is_complete(spark, paths["output"], corpus_path)
+
 
 class TestPendingAfterResume:
     def test_no_lineage_means_everything_pending(self, spark, corpus_path, tmp_path):
@@ -291,192 +328,107 @@ class TestPendingAfterResume:
         # the previously-planned DataFrame still sees the old state
         assert pending.count() == 300
 
+    def test_latest_lineage_row_decides_done(self, spark, tmp_path):
+        """A bucket is done when its latest lineage row by finished_at
+        is done, whatever order the rows are stored in: done -> stale
+        -> done is done, done -> stale is not."""
+        from datetime import datetime, timezone
 
-class TestRepairEmpty:
-    """R5: targeted re-extraction of completed-but-empty output rows
-    (reference task_manager.py:1298-1349)."""
+        columns = [c.split()[0] for c in LINEAGE_SCHEMA.split(", ")]
 
-    def test_repair_restores_corrupted_rows(self, spark, tmp_path):
-        import pyarrow.parquet as pq
-        import pyarrow as pa
-        import os
-        from pyspark.sql import functions as F
-        from ocr_spark.corpus import write_corpus
-        from ocr_spark.plans.lineage import output_is_complete, repair_empty, run_pipeline
+        def row(bucket, status, second):
+            at = datetime(2026, 1, 1, 0, 0, second, tzinfo=timezone.utc)
+            values = dict(bucket=bucket, status=status, finished_at=at)
+            return tuple(values.get(c) for c in columns)
 
-        inp = str(tmp_path / "in.parquet")
-        write_corpus(inp, 100, seed=17)
-        out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
-        run_pipeline(spark, inp, out, lin, n_buckets=8)
-        golden = {
-            r.url: r.content_hash
-            for r in spark.read.parquet(out).select("url", "content_hash").collect()
-        }
-
-        # simulate a transient fault: blank 3 docs inside one bucket file
-        bucket_dirs = [d for d in os.listdir(out) if d.startswith("bucket=")]
-        bdir = os.path.join(out, sorted(bucket_dirs)[0])
-        # pick the largest part file so we can blank several rows
-        parts = [
-            os.path.join(bdir, x)
-            for x in os.listdir(bdir)
-            if x.endswith(".parquet")
+        rows = [
+            row(0, "done", 1), row(0, "stale", 2), row(0, "done", 3),
+            row(1, "done", 1), row(1, "stale", 2),
+            row(2, "done", 1),
         ]
-        f = max(parts, key=os.path.getsize)
-        t = pq.read_table(f).to_pylist()
-        n_corrupt = min(3, len(t))
-        corrupted = [r["url"] for r in t[:n_corrupt]]
-        for r in t[:n_corrupt]:
-            r["text"], r["chars_out"], r["status"] = "", 0, "completed"
-        pq.write_table(pa.Table.from_pylist(t, schema=pq.read_table(f).schema), f)
-        crc = os.path.join(bdir, "." + os.path.basename(f) + ".crc")
-        if os.path.exists(crc):
-            os.remove(crc)  # stale Hadoop checksum sidecar
-        spark.catalog.refreshByPath(out)  # drop cached file statuses
+        lin = str(tmp_path / "lineage")
+        spark.createDataFrame(rows[::-1], LINEAGE_SCHEMA).write.parquet(lin)
+        assert done_buckets(spark, lin) == [0, 2]
 
-        n = repair_empty(spark, inp, out, n_partitions=4)
-        assert n == n_corrupt and n >= 1
-        fixed = spark.read.parquet(out)
-        assert output_is_complete(spark, out, inp)
-        got = {r.url: r.content_hash for r in fixed.select("url", "content_hash").collect()}
-        assert got == golden
-        assert fixed.filter((F.col("status") == "completed") & (F.col("chars_out") == 0)).count() == 0
-        assert corrupted  # sanity: we really corrupted something
 
-    def test_repair_with_sparse_top_buckets(self, spark, tmp_path):
-        """Regression (round-2 ADVICE): with many more buckets than
-        docs the top buckets are empty, so inferring the bucket count
-        as max(bucket)+1 re-assigns redone rows under a wrong modulus
-        and the dynamic overwrite replaces unrelated buckets. The
-        repair must reuse each target row's STORED bucket instead."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from ocr_spark.corpus import write_corpus
-        from ocr_spark.plans.lineage import (
-            output_is_complete,
-            repair_empty,
-            run_pipeline,
-        )
-
-        inp = str(tmp_path / "in.parquet")
-        write_corpus(inp, 60, seed=23)
-        out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
-        run_pipeline(spark, inp, out, lin, n_buckets=4096)
-        outdf = spark.read.parquet(out)
-        max_bucket = outdf.agg(F.max("bucket")).first()[0]
-        assert max_bucket < 4095  # precondition: top buckets ARE empty
-        golden = {
-            (r.url, r.bucket): r.content_hash
-            for r in outdf.select("url", "bucket", "content_hash").collect()
-        }
-
-        bucket_dirs = sorted(
-            d for d in os.listdir(out) if d.startswith("bucket=")
-        )
-        bdir = os.path.join(out, bucket_dirs[0])
-        parts = [
-            os.path.join(bdir, x)
-            for x in os.listdir(bdir)
-            if x.endswith(".parquet")
-        ]
-        f = max(parts, key=os.path.getsize)
-        t = pq.read_table(f).to_pylist()
-        t[0]["text"], t[0]["chars_out"], t[0]["status"] = "", 0, "completed"
-        pq.write_table(pa.Table.from_pylist(t, schema=pq.read_table(f).schema), f)
-        crc = os.path.join(bdir, "." + os.path.basename(f) + ".crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        spark.catalog.refreshByPath(out)
-
-        assert repair_empty(spark, inp, out, n_partitions=4) == 1
-        fixed = spark.read.parquet(out)
-        assert output_is_complete(spark, out, inp)
-        got = {
-            (r.url, r.bucket): r.content_hash
-            for r in fixed.select("url", "bucket", "content_hash").collect()
-        }
-        assert got == golden  # same rows, same buckets, same bytes
-
-    def test_repair_kill_during_swap_recovers(self, spark, tmp_path):
-        """A kill between the two renames of a bucket swap leaves a
-        ``_repair_old_bucket=N`` trash dir and no live bucket dir.
-        The output must stay readable at every intermediate state
-        (the in-flight dirs start with '_', invisible to partition
-        discovery), and recover_repair must roll the bucket forward
-        when the staged copy exists, back when it doesn't — never a
-        mix within a bucket."""
+class TestAuditBuckets:
+    def test_audit_redoes_damaged_and_lost_buckets(
+        self, spark, corpus_path, paths, tmp_path
+    ):
+        """A bucket whose output rows were damaged and a bucket whose
+        directory is gone fail the audit; the next run_pipeline redoes
+        exactly those two, byte-identically, and a completed page with
+        no text (all boilerplate) is never flagged. Stale rows leave
+        the lineage sums alone: over the latest row per bucket they
+        equal the input."""
         import os
         import shutil
 
-        from ocr_spark.corpus import write_corpus
-        from ocr_spark.plans.lineage import (
-            REPAIR_STAGING,
-            REPAIR_TRASH_PREFIX,
-            output_is_complete,
-            recover_repair,
-            run_pipeline,
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        inp, out, lin = str(tmp_path / "in.parquet"), paths["output"], paths["lineage"]
+        table = pq.read_table(corpus_path)
+        nav = {c: [None] for c in table.column_names}
+        nav.update(url=["https://nav.example/only-nav"], html=[NAV_ONLY])
+        pq.write_table(
+            pa.concat_tables([table, pa.Table.from_pydict(nav, schema=table.schema)]), inp
         )
 
-        inp = str(tmp_path / "in.parquet")
-        write_corpus(inp, 80, seed=29)
-        out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
-        run_pipeline(spark, inp, out, lin, n_buckets=8)
-        golden = {
-            r.url: r.content_hash
-            for r in spark.read.parquet(out)
-            .select("url", "content_hash")
-            .collect()
-        }
-        b_fwd, b_back = sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(out)
-            if d.startswith("bucket=")
-        )[:2]
+        def run(run_id):
+            return run_pipeline(spark, inp, out, lin, run_id=run_id, n_buckets=N_BUCKETS)
 
-        # kill state A (roll-forward): staging written, live renamed to
-        # trash, second rename never happened
-        staged = os.path.join(out, REPAIR_STAGING, f"bucket={b_fwd}")
-        shutil.copytree(os.path.join(out, f"bucket={b_fwd}"), staged)
-        os.rename(
-            os.path.join(out, f"bucket={b_fwd}"),
-            os.path.join(out, f"{REPAIR_TRASH_PREFIX}{b_fwd}"),
-        )
-        # kill state B (roll-back): live renamed to trash, no staged copy
-        os.rename(
-            os.path.join(out, f"bucket={b_back}"),
-            os.path.join(out, f"{REPAIR_TRASH_PREFIX}{b_back}"),
-        )
+        def output():
+            # every column but the per-run task id and timing
+            df = spark.read.parquet(out).drop("partition_id", "elapsed_us")
+            return sorted(tuple(r) for r in df.collect())
 
-        # half-swapped output is still readable (in-flight dirs hidden)
-        spark.catalog.refreshByPath(out)
-        readable = spark.read.parquet(out)
-        assert readable.count() > 0
+        run("r1")
+        first = output()
+        nav_row = spark.read.parquet(out).filter(F.col("url") == nav["url"][0]).first()
+        assert (nav_row.status, nav_row.chars_out) == ("completed", 0)
+        assert audit_buckets(spark, out, lin) == []
 
-        assert recover_repair(spark, out) == 2
-        assert recover_repair(spark, out) == 0  # idempotent
-        spark.catalog.refreshByPath(out)
+        damaged, lost = [b for b in range(N_BUCKETS) if b != nav_row.bucket][:2]
+        redo = F.col("bucket").isin(damaged, lost)
+        n_redo = spark.read.parquet(out).filter(redo).count()
+        bdir = os.path.join(out, f"bucket={damaged}")
+        (f,) = [os.path.join(bdir, x) for x in os.listdir(bdir) if x.endswith(".parquet")]
+        rows = pq.read_table(f).to_pylist()
+        rows[0].update(text="", chars_out=0, content_hash=textops.sha256_text(""))
+        pq.write_table(pa.Table.from_pylist(rows, schema=pq.read_table(f).schema), f)
+        os.remove(os.path.join(bdir, f".{os.path.basename(f)}.crc"))  # stale checksum
+        shutil.rmtree(os.path.join(out, f"bucket={lost}"))
+
+        assert audit_buckets(spark, out, lin) == [damaged, lost]
+        assert done_buckets(spark, lin) == sorted(set(range(N_BUCKETS)) - {damaged, lost})
+        assert run("r2") == {"run_id": "r2", "buckets_processed": 2, "docs": n_redo}
+        assert output() == first
         assert output_is_complete(spark, out, inp)
-        got = {
-            r.url: r.content_hash
-            for r in spark.read.parquet(out)
-            .select("url", "content_hash")
-            .collect()
-        }
-        assert got == golden
-        assert not os.path.exists(os.path.join(out, REPAIR_STAGING))
-        assert not any(
-            d.startswith(REPAIR_TRASH_PREFIX) for d in os.listdir(out)
+        assert audit_buckets(spark, out, lin) == []
+        assert run("r3")["docs"] == 0
+
+        lineage = spark.read.parquet(lin)
+        stale = lineage.filter(F.col("status") == "stale").collect()
+        assert sorted(r.bucket for r in stale) == [damaged, lost]
+        assert all(
+            (r.n_docs, r.n_ok, r.n_failed, r.bytes_in, r.chars_out) == (0, 0, 0, 0, 0)
+            for r in stale
         )
-
-    def test_repair_noop_when_clean(self, spark, tmp_path):
-        from ocr_spark.corpus import write_corpus
-        from ocr_spark.plans.lineage import repair_empty, run_pipeline
-
-        inp = str(tmp_path / "in.parquet")
-        write_corpus(inp, 40, seed=19)
-        out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
-        run_pipeline(spark, inp, out, lin, n_buckets=4)
-        assert repair_empty(spark, inp, out) == 0
+        assert lineage.filter(F.col("bucket") == nav_row.bucket).count() == 1
+        sums = ["n_docs", "n_ok", "n_failed", "bytes_in", "chars_out"]
+        latest = (
+            lineage.groupBy("bucket")
+            .agg(F.max_by(F.struct("status", *sums), "finished_at").alias("r"))
+            .select("r.*")
+        )
+        assert {r.status for r in latest.collect()} == {"done"}
+        got = latest.agg(*(F.sum(c).alias(c) for c in sums)).first()
+        want = spark.read.parquet(out).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum((F.col("status") == "completed").cast("long")).alias("n_ok"),
+            F.sum((F.col("status") != "completed").cast("long")).alias("n_failed"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("chars_out").alias("chars_out"),
+        ).first()
+        assert got == want and got.n_docs == 301

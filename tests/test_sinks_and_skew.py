@@ -1,4 +1,4 @@
-"""Export sinks (S6), quarantine routing (F1/F3), the spark-submit job
+"""Quarantine routing (F1/F3), the spark-submit job
 entrypoint, and the url-hash repartitioning skew guarantee (north rule)."""
 
 import json
@@ -22,24 +22,6 @@ def _corpus(spark, tmp_path, n=200, seed=5):
 # ---------------------------------------------------------------------------
 # sinks
 # ---------------------------------------------------------------------------
-
-
-def test_export_three_formats(spark, tmp_path):
-    from ocr_spark.operators import extract_documents
-    from ocr_spark.sources import sinks
-
-    extracted = extract_documents(_corpus(spark, tmp_path), n_partitions=4)
-    jd, td, md = (str(tmp_path / x) for x in ("j", "t", "m"))
-    sinks.export_json(extracted, jd)
-    sinks.export_text(extracted, td)
-    sinks.export_markdown(extracted, md)
-
-    jrows = spark.read.json(jd)
-    assert jrows.count() == 200
-    assert {"url", "status", "text", "content_hash"} <= set(jrows.columns)
-    assert spark.read.text(md).filter(
-        F.col("value").startswith("# https://")
-    ).count() == 200
 
 
 def test_quarantine_rejects(spark, tmp_path):
