@@ -218,7 +218,12 @@ def _breakdown_worker(width: int) -> None:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators import extract_documents
-    from ocr_spark.operators.extract import EXTRACT_SCHEMA, admit, extract_batch
+    from ocr_spark.operators.extract import (
+        ADMITTED_COLUMNS,
+        EXTRACT_SCHEMA,
+        admit,
+        extract_batch,
+    )
     from ocr_spark.session import get_spark
 
     spark = get_spark(app_name=f"ocr_spark-breakdown-{width}", cores=width)
@@ -234,7 +239,7 @@ def _breakdown_worker(width: int) -> None:
         # full job minus the url-hash repartition
         return (
             admit(job)
-            .select("url", "html")
+            .select(*ADMITTED_COLUMNS)
             .mapInPandas(extract_batch, schema=EXTRACT_SCHEMA)
             .count()
         )

@@ -20,7 +20,8 @@ buckets whose latest lineage row is ``status='done'`` and processes
 only the rest; output is partitioned by bucket with dynamic overwrite,
 so a rerun replaces exactly the buckets it recomputes
 (ocr_spark.plans.lineage). A rerun must use the ``--buckets`` the
-lineage was written with; another count is refused. To re-verify a
+lineage was written with; another count is refused with one
+``error: ...`` line on stderr and exit status 1. To re-verify a
 finished output, call ``plans.lineage.audit_buckets``: it marks every
 bucket whose output no longer matches its lineage ``stale``, and the
 next run of this job redoes exactly those buckets.
@@ -62,15 +63,20 @@ def main() -> None:
     from ocr_spark.session import get_spark
 
     spark = get_spark(app_name="ocr_spark-extract")
-    summary = run_pipeline(
-        spark,
-        input_path=args.input,
-        output_path=args.output,
-        lineage_path=args.lineage,
-        run_id=args.run_id,
-        n_buckets=args.buckets,
-        n_partitions=args.partitions,
-    )
+    try:
+        summary = run_pipeline(
+            spark,
+            input_path=args.input,
+            output_path=args.output,
+            lineage_path=args.lineage,
+            run_id=args.run_id,
+            n_buckets=args.buckets,
+            n_partitions=args.partitions,
+        )
+    except ValueError as exc:  # e.g. lineage written under another --buckets
+        print(f"error: {exc}", file=sys.stderr)
+        spark.stop()
+        sys.exit(1)
     if args.yield_report:
         from pyspark.sql import functions as F
 

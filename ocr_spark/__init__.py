@@ -15,7 +15,14 @@ Layout:
     corpus         seeded synthetic corpus generator (full input shape)
     operators/     Spark-side pipeline: admission, url-hash repartitioning, extraction, assembly
     plans/         lineage/checkpoint table + resume anti-join
-    functions/     column-expression helpers (admission, url bucket, salted aggregation)
+    functions/     column-expression helpers (url bucket, salted aggregation) and the admission limits
+
+Importing the package also stops the per-task re-read of zip archives
+on ``sys.path`` in PySpark's Python workers (see ``_zipstamp``).
 """
+
+from . import _zipstamp
+
+_zipstamp.install()
 
 __version__ = "0.1.0"

@@ -4,16 +4,19 @@ Replaces the reference's queue/worker/per-page-HTTP pipeline
 (core/page_processor.py:502-626, task_queue.py:546-635) with one
 Arrow-batched ``mapInPandas`` over the documents table:
 
-    scan(parquet/iceberg) -> admission filter (columnar, pushed down)
+    scan(parquet/iceberg) -> admit: size guard (JVM, no sniff)
       -> balance: coalesce scan splits, or an xxhash64(url) repartition
       -> mapInPandas(extract_batch)  # the only Python on the hot path
       -> per-doc rows (url, status, text, hash, metrics, partition_id)
 
 Every row goes through one never-raising kernel, :func:`_extract`:
-sniff, parse (html or pdf), apply the F2 page limit, assemble. Per-document
-failures become (status='failed', error_message) rows — the reference's
-R2 semantics (poison rows never kill the job,
-core/error_handler.py:87-193) — instead of task retries.
+sniff, admission (kind check and per-kind size caps), parse (html or
+pdf), apply the F2 page limit, assemble. A payload that fails admission
+becomes a (status='rejected', error_message=reason) row, a per-document
+failure a (status='failed', error_message) row — the reference's R2
+semantics (poison rows never kill the job,
+core/error_handler.py:87-193) — instead of task retries or a silent
+drop: every input row comes out as one document row.
 
 Three output shapes, each a thin projection of that kernel behind one
 balance helper (:func:`_balanced_map`):
@@ -37,10 +40,10 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import MAX_PDF_PAGES, payload_kind, reject_reason
+from ..functions import MAX_HTML_BYTES, MAX_PDF_BYTES, MAX_PDF_PAGES
 from ..html_extract import html_extract
 from ..pdf_extract import pdf_assemble, pdf_extract_pages
-from ..textops import MODERATION_BLOCKED_MESSAGE, sha256_text, sniff_kind
+from ..textops import MODERATION_BLOCKED_MESSAGE, SNIFF_BYTES, sha256_text, sniff_kind
 
 EXTRACT_SCHEMA = (
     "url string, kind string, status string, error_message string, "
@@ -61,26 +64,47 @@ SPANS_SCHEMA = (
 # pandas dtypes for the schemas' integer columns; strings stay lists.
 _DTYPES = {"int": "int32", "bigint": "int64"}
 
+# The columns admit() ships into the kernel: the payload, cut to
+# SNIFF_BYTES when it is over every cap, and its true length.
+ADMITTED_COLUMNS = ("url", "html", "bytes_in")
 
-def _extract(payload: Optional[bytes], max_pages: int = MAX_PDF_PAGES) -> tuple:
+# Admission (reference F1 size caps, F3 unknown type): per sniffed kind,
+# its byte cap and the reason a payload over it is rejected with.
+_CAPS = {
+    "pdf": (MAX_PDF_BYTES, "pdf too large"),
+    "html": (MAX_HTML_BYTES, "html too large"),
+}
+
+
+def _extract(
+    payload: Optional[bytes],
+    max_pages: int = MAX_PDF_PAGES,
+    size: Optional[int] = None,
+) -> tuple:
     """(kind, status, error, pages, out) for one payload; never raises.
 
     ``pages`` is the per-page text (one page for HTML); ``out`` is the
     assembled Extracted (text + spans), None unless status is
-    'completed'. A PDF over ``max_pages`` (reference F2, main.py:829-832)
-    fails with its pages still counted.
+    'completed'. ``size`` is the payload's true length (``bytes_in``
+    from :func:`admit`, which cuts an oversized payload), default
+    ``len(payload)``. A payload of unknown kind or over its kind's cap
+    is 'rejected' unparsed. A PDF over ``max_pages`` (reference F2,
+    main.py:829-832) fails with its pages still counted.
     """
     kind = sniff_kind(payload)
+    cap = _CAPS.get(kind)
+    if cap is None:
+        return kind, "rejected", "unsupported payload type", [], None
+    if (len(payload) if size is None else size) > cap[0]:
+        return kind, "rejected", cap[1], [], None
     try:
         if kind == "pdf":
             pages = pdf_extract_pages(payload)
             if len(pages) > max_pages:
                 return kind, "failed", f"page count {len(pages)} exceeds limit", pages, None
             return kind, "completed", None, pages, pdf_assemble(pages)
-        if kind == "html":
-            out = html_extract(payload)
-            return kind, "completed", None, [out.text], out
-        return kind, "failed", "unsupported payload type", [], None
+        out = html_extract(payload)
+        return kind, "completed", None, [out.text], out
     except Exception as exc:  # pragma: no cover - defensive, R2 semantics
         return kind, "failed", f"{type(exc).__name__}: {exc}", [], None
 
@@ -88,16 +112,19 @@ def _extract(payload: Optional[bytes], max_pages: int = MAX_PDF_PAGES) -> tuple:
 def _map_rows(
     batches: Iterator[pd.DataFrame], schema: str, project: Callable
 ) -> Iterator[pd.DataFrame]:
-    """The one Arrow boundary: ``project(url, payload)`` returns the
-    output rows of one input row as tuples in ``schema`` order, minus
-    ``partition_id``, which is filled in here."""
+    """The one Arrow boundary over :data:`ADMITTED_COLUMNS` frames:
+    ``project(url, payload, size)`` returns the output rows of one input
+    row as tuples in ``schema`` order, minus ``partition_id``, which is
+    filled in here."""
     fields = [f.split() for f in schema.split(",")]
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
     for frame in batches:
         rows: List[tuple] = []
-        for url, payload in zip(frame["url"].tolist(), frame["html"].tolist()):
-            rows.extend(project(url, payload))
+        for row in zip(
+            frame["url"].tolist(), frame["html"].tolist(), frame["bytes_in"].tolist()
+        ):
+            rows.extend(project(*row))
         cols = zip(*rows)
         data = {}
         for name, typ in fields:
@@ -106,28 +133,30 @@ def _map_rows(
         yield pd.DataFrame(data)
 
 
-def _document_rows(url: str, payload: Optional[bytes], max_pages: int) -> List[tuple]:
+def _document_rows(
+    url: str, payload: Optional[bytes], size: int, max_pages: int
+) -> List[tuple]:
     t0 = time.monotonic_ns()
-    kind, status, error, pages, out = _extract(payload, max_pages)
+    kind, status, error, pages, out = _extract(payload, max_pages, size)
     text = out.text if out is not None else None
     return [(
         url, kind, status, error, len(pages), text,
         sha256_text(text) if text is not None else None,
-        len(payload) if payload is not None else 0,
+        size,
         len(text) if text is not None else 0,
         (time.monotonic_ns() - t0) // 1000,
     )]
 
 
-def _page_rows(url: str, payload: Optional[bytes]) -> List[tuple]:
-    _, status, error, pages, _ = _extract(payload)
-    if status == "failed":
+def _page_rows(url: str, payload: Optional[bytes], size: int) -> List[tuple]:
+    _, status, error, pages, _ = _extract(payload, size=size)
+    if status != "completed":
         return [(url, 1, status, error, None, 0)]
     return [(url, i, status, None, p, len(p)) for i, p in enumerate(pages, 1)]
 
 
-def _span_rows(url: str, payload: Optional[bytes]) -> List[tuple]:
-    out = _extract(payload)[4]
+def _span_rows(url: str, payload: Optional[bytes], size: int) -> List[tuple]:
+    out = _extract(payload, size=size)[4]
     if out is None:
         return []
     return [
@@ -140,8 +169,9 @@ def _span_rows(url: str, payload: Optional[bytes]) -> List[tuple]:
 def extract_batch(
     batches: Iterator[pd.DataFrame], max_pages: int = MAX_PDF_PAGES
 ) -> Iterator[pd.DataFrame]:
-    """mapInPandas payload: one EXTRACT_SCHEMA row per document. Bind a
-    non-default F2 page limit with ``functools.partial``."""
+    """mapInPandas payload over :func:`admit`'s columns: one
+    EXTRACT_SCHEMA row per document. Bind a non-default F2 page limit
+    with ``functools.partial``."""
     return _map_rows(
         batches, EXTRACT_SCHEMA, partial(_document_rows, max_pages=max_pages)
     )
@@ -153,9 +183,9 @@ def extract_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     PDFs emit one row per page; HTML emits a single page-1 row (the
     reference's image tasks are single-page, task_manager.py:500-512).
     Empty pages keep status 'completed' with empty content, exactly the
-    rows the assembly filter F8 later drops. A failed document (over
-    the page limit, unparseable) emits one failed page-1 row carrying
-    the document's error_message.
+    rows the assembly filter F8 later drops. A failed or rejected
+    document (over the page limit, unparseable, failed admission) emits
+    one page-1 row carrying the document's status and error_message.
     """
     return _map_rows(batches, PAGES_SCHEMA, _page_rows)
 
@@ -172,17 +202,25 @@ def extract_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     ``text[start : start + length]`` — NOT taken from the block object
     — so the offsets themselves are what any downstream roundtrip
     (and the DuckDB oracle) exercises: a wrong start/length yields a
-    wrong slice and a hash mismatch. Failed/unsupported docs emit no
+    wrong slice and a hash mismatch. Failed and rejected docs emit no
     span rows; their status lives in the document-level output (R2).
     """
     return _map_rows(batches, SPANS_SCHEMA, _span_rows)
 
 
 def admit(df: DataFrame) -> DataFrame:
-    """Admission control (reference F1/F3): sniff kind columnar-ly,
-    keep the rows with no reject reason. The predicate is a plain
-    expression Catalyst can evaluate at the scan."""
-    return df.withColumn("kind", payload_kind()).filter(reject_reason().isNull())
+    """The JVM half of admission: a size guard with no sniff and no
+    filter. Adds ``bytes_in``, the payload's true length (0 for null),
+    and cuts a payload over MAX_PDF_BYTES, the largest cap, to the
+    SNIFF_BYTES that ``sniff_kind`` reads, so a huge payload never
+    crosses the Arrow boundary. Every row is kept: :func:`_extract`
+    applies the kind check and per-kind caps (reference F1/F3) and
+    rejects with a reason. Pass :data:`ADMITTED_COLUMNS` to the UDF."""
+    size = F.coalesce(F.length("html"), F.lit(0))
+    guarded = F.when(size > MAX_PDF_BYTES, F.substring("html", 1, SNIFF_BYTES))
+    return df.withColumn("bytes_in", size).withColumn(
+        "html", guarded.otherwise(F.col("html"))
+    )
 
 
 # scan-strategy cap on the task count: coalesce merges scan partitions
@@ -198,9 +236,9 @@ def _balanced_map(
     n_partitions: Optional[int],
     strategy: str,
 ) -> DataFrame:
-    """Admission -> partition balance -> one mapInPandas (the strategies
-    are described on :func:`extract_documents`)."""
-    admitted = admit(df).select("url", "html")
+    """Admission guard -> partition balance -> one mapInPandas (the
+    strategies are described on :func:`extract_documents`)."""
+    admitted = admit(df).select(*ADMITTED_COLUMNS)
     if strategy == "scan":
         admitted = admitted.coalesce(
             n_partitions
@@ -219,7 +257,9 @@ def extract_documents(
     max_pages: int = MAX_PDF_PAGES,
     strategy: str = "scan",
 ) -> DataFrame:
-    """Admission -> partition-balance -> Arrow-batched extraction.
+    """Admission guard -> partition-balance -> Arrow-batched extraction;
+    one output row per input row, a payload that fails admission as a
+    ``status='rejected'`` row with its reason.
 
     Two balance strategies; pick by input shape:
 

@@ -5,13 +5,14 @@ Replaces the reference's page-granular SQLite state machine
 core/recovery_manager.py:270-334 checkpoints) with partition-granular
 lineage rows (FIXTURES.md §3): each url-hash *bucket* that finishes
 extraction appends one row ``(run_id, bucket, n_buckets, status,
-n_docs, n_ok, n_failed, bytes_in, chars_out, max_doc_ms, finished_at,
-content_hash)`` to a lineage table. A bucket is done when its latest
-row by ``finished_at`` says ``status='done'``; a rerun processes only
-the buckets that are not done (the reference's restore-on-boot,
-task_queue.py:369-443, which *fails* interrupted tasks because the
-upload bytes are gone — here the source table is durable, so resume is
-true resume). ``n_buckets`` is the url-hash modulus the row was
+n_docs, n_ok, n_failed, n_rejected, bytes_in, chars_out, max_doc_ms,
+finished_at, content_hash)`` to a lineage table; ``n_docs = n_ok +
+n_failed + n_rejected`` counts every input row of the bucket. A bucket
+is done when its latest row by ``finished_at`` says ``status='done'``;
+a rerun processes only the buckets that are not done (the reference's
+restore-on-boot, task_queue.py:369-443, which *fails* interrupted tasks
+because the upload bytes are gone — here the source table is durable,
+so resume is true resume). ``n_buckets`` is the url-hash modulus the row was
 written under: a rerun under another modulus would file urls in other
 buckets, so it is refused.
 
@@ -40,12 +41,13 @@ from pyspark.sql import functions as F
 
 from ..functions import url_bucket
 from .fs import hadoop_fs
-from ..operators.extract import EXTRACT_SCHEMA, admit, extract_batch
+from ..operators.extract import ADMITTED_COLUMNS, EXTRACT_SCHEMA, admit, extract_batch
 
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, n_buckets int, status string, n_docs bigint, "
-    "n_ok bigint, n_failed bigint, bytes_in bigint, chars_out bigint, "
-    "max_doc_ms bigint, finished_at timestamp, content_hash string"
+    "n_ok bigint, n_failed bigint, n_rejected bigint, bytes_in bigint, "
+    "chars_out bigint, max_doc_ms bigint, finished_at timestamp, "
+    "content_hash string"
 )
 
 DEFAULT_N_BUCKETS = 64
@@ -61,7 +63,9 @@ _OUTPUT_METADATA = (
 
 # What the audit compares. Per-document times, finished_at and run_id
 # differ between two runs over the same bytes.
-_AUDITED = ("n_docs", "n_ok", "n_failed", "bytes_in", "chars_out", "content_hash")
+_AUDITED = (
+    "n_docs", "n_ok", "n_failed", "n_rejected", "bytes_in", "chars_out", "content_hash"
+)
 
 
 def lineage_rows(extracted: DataFrame, run_id: str, n_buckets: int) -> DataFrame:
@@ -73,8 +77,9 @@ def lineage_rows(extracted: DataFrame, run_id: str, n_buckets: int) -> DataFrame
         F.lit("done").alias("status"),
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("status") == "completed", 1).otherwise(0)).alias("n_ok"),
-        F.sum(F.when(F.col("status") != "completed", 1).otherwise(0)).alias(
-            "n_failed"
+        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("n_failed"),
+        F.sum(F.when(F.col("status") == "rejected", 1).otherwise(0)).alias(
+            "n_rejected"
         ),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("chars_out").alias("chars_out"),
@@ -191,7 +196,7 @@ def run_pipeline(
 ) -> dict:
     """The resumable extraction job (build plan §7.6).
 
-    scan -> resume filter -> admission -> exchange sending bucket b to
+    scan -> resume filter -> admission guard -> exchange sending bucket b to
     task b % width -> extract -> write output partitioned by bucket
     (dynamic overwrite: reruns replace exactly the buckets they
     recompute) -> append lineage rows. ``width`` is ``n_partitions``
@@ -217,7 +222,7 @@ def run_pipeline(
     extracted = (
         admit(pending)
         .repartitionById(min(width, n_buckets), "bucket")
-        .select("url", "html")
+        .select(*ADMITTED_COLUMNS)
         .mapInPandas(extract_batch, schema=EXTRACT_SCHEMA)
         .withColumn("bucket", url_bucket(n_buckets))
     )
@@ -258,10 +263,12 @@ def audit_buckets(
     through the same ``lineage_rows`` aggregate a run uses, and each
     bucket's counts and ``content_hash`` are compared with its latest
     lineage row. The comparison trusts the per-document
-    ``content_hash`` column; it does not rehash the text. A bucket that
-    disagrees, or whose directory is gone, gets a ``status='stale'`` row
-    with zero counts (every lineage sum stays the same) and the
-    ``content_hash`` found, null if none. It is then no longer done, so
+    ``content_hash`` column; it does not rehash the text. A column the
+    row was written without (null, such as ``n_rejected`` before it
+    existed) is not compared. A bucket that disagrees, or whose
+    directory is gone, gets a ``status='stale'`` row with zero counts
+    (every lineage sum stays the same) and the ``content_hash`` found,
+    null if none. It is then no longer done, so
     the next ``run_pipeline`` redoes exactly these buckets.
 
     Reads the metadata of every done bucket, so it is a call of its
@@ -281,12 +288,13 @@ def audit_buckets(
     stale = sorted(
         b
         for b, row in done.items()
-        if b not in found or any(row[c] != found[b][c] for c in _AUDITED)
+        if b not in found
+        or any(row[c] is not None and row[c] != found[b][c] for c in _AUDITED)
     )
     if stale:
         run_id, now = uuid.uuid4().hex[:12], datetime.now(timezone.utc)
         marks = [
-            (run_id, b, done[b].n_buckets, "stale", 0, 0, 0, 0, 0, None, now,
+            (run_id, b, done[b].n_buckets, "stale", 0, 0, 0, 0, 0, 0, None, now,
              found[b].content_hash if b in found else None)
             for b in stale
         ]

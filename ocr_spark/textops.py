@@ -278,6 +278,10 @@ def content_hash_of(hashes: Iterable[str]) -> str:
     return h.hexdigest()
 
 
+# sniff_kind reads at most this many leading bytes of a payload.
+SNIFF_BYTES = 1024
+
+
 def sniff_kind(payload: Optional[bytes]) -> str:
     """Classify a binary payload: 'pdf' | 'html' | 'unknown'.
 
@@ -287,7 +291,7 @@ def sniff_kind(payload: Optional[bytes]) -> str:
     """
     if not payload:
         return "unknown"
-    head = payload[:1024].lstrip()
+    head = payload[:SNIFF_BYTES].lstrip()
     if head.startswith(b"%PDF-"):
         return "pdf"
     low = head[:256].lower()

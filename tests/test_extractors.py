@@ -218,6 +218,52 @@ class TestPdfExtract:
             assert pdf_extract(pdf).text == truth, f"seed {seed}"
 
 
+class TestAdmission:
+    """The kernel's admission rule (reference F1 size caps, F3 unknown
+    type), at each cap's exact boundary. ``size`` stands in for the
+    true length that ``admit`` ships beside a cut payload."""
+
+    def test_pdf_cap_boundary(self):
+        import zlib
+
+        from ocr_spark.functions import MAX_PDF_BYTES
+        from ocr_spark.operators.extract import _extract
+
+        pdf = _flate_pdf([zlib.compress(b"BT (a) Tj ET")])
+        assert _extract(pdf, size=MAX_PDF_BYTES)[:3] == ("pdf", "completed", None)
+        assert _extract(pdf, size=MAX_PDF_BYTES + 1) == (
+            "pdf", "rejected", "pdf too large", [], None
+        )
+
+    def test_html_cap_boundary(self):
+        from ocr_spark.functions import MAX_HTML_BYTES, MAX_PDF_BYTES
+        from ocr_spark.operators.extract import _extract
+
+        html = b"<html><body><p>fine words here</p></body></html>"
+        assert _extract(html, size=MAX_HTML_BYTES)[:3] == ("html", "completed", None)
+        for size in (MAX_HTML_BYTES + 1, MAX_PDF_BYTES + 1):
+            assert _extract(html, size=size) == (
+                "html", "rejected", "html too large", [], None
+            )
+
+    def test_unknown_kind_rejected_at_any_size(self):
+        from ocr_spark.functions import MAX_PDF_BYTES
+        from ocr_spark.operators.extract import _extract
+
+        rejected = ("unknown", "rejected", "unsupported payload type", [], None)
+        for payload in (None, b"", b"  \n", b"\x00\x01 binary"):
+            assert _extract(payload) == rejected
+            assert _extract(payload, size=MAX_PDF_BYTES + 1) == rejected
+
+    def test_size_defaults_to_payload_length(self, monkeypatch):
+        from ocr_spark.operators import extract as extract_module
+
+        html = b"<p>fine words here</p>"
+        monkeypatch.setitem(extract_module._CAPS, "html", (len(html), "html too large"))
+        assert extract_module._extract(html)[1] == "completed"
+        assert extract_module._extract(html + b" ")[1:3] == ("rejected", "html too large")
+
+
 class TestCorpusRoundtrip:
     """The central contract: extractor(payload) == ground truth text,
     byte-for-byte, for every generated row."""

@@ -207,7 +207,8 @@ class TestRunPipeline:
         assert key, plan
         bucket_expr = rf"pmod\(xxhash64\(url#\d+, 42\), {N_BUCKETS}\) as int\) AS {key[1]}\b"
         assert re.search(bucket_expr, plan), plan
-        assert "Filter" in plan[plan.index("Exchange"):], plan  # admission first
+        # the admission guard runs before the exchange
+        assert "length(html#" in plan[plan.index("Exchange"):], plan
         assert plan.count("MapInPandas") == 1, plan
 
         cols = ["url", "content_hash", "status", "bytes_in", "chars_out"]
@@ -256,6 +257,56 @@ class TestRunPipeline:
         assert agg.docs == 300
         assert agg.ok == 300
         assert agg.bytes > 0 and agg.chars > 0
+
+    def test_rejected_rows_accounted_for(self, spark, tmp_path, paths):
+        """200 HTML rows plus 5 binary-garbage rows: the output holds all
+        205, lineage counts them as n_ok + n_failed + n_rejected, and a
+        bucket holding only rejected rows is done, so a rerun is a no-op."""
+        candidates = spark.createDataFrame(
+            [(f"https://h{i % 7}.example/p/{i}",) for i in range(400)], "url string"
+        ).withColumn("bucket", url_bucket(N_BUCKETS))
+        by_bucket = [(r.url, r.bucket) for r in candidates.collect()]
+        html_urls = [u for u, b in by_bucket if b != N_BUCKETS - 1][:200]
+        junk_urls = [u for u, b in by_bucket if b == N_BUCKETS - 1][:5]
+        assert len(html_urls) == 200 and len(junk_urls) == 5
+        rows = [
+            (u, f"<html><body><p>page {i} says hello</p></body></html>".encode())
+            for i, u in enumerate(html_urls)
+        ] + [(u, b"\x00\x01\xfe\xff binary %d" % i) for i, u in enumerate(junk_urls)]
+        inp = str(tmp_path / "mixed.parquet")
+        spark.createDataFrame(rows, "url string, html binary").write.parquet(inp)
+
+        summary = run_pipeline(
+            spark, inp, paths["output"], paths["lineage"], n_buckets=N_BUCKETS
+        )
+        assert summary["docs"] == 205
+        out = spark.read.parquet(paths["output"])
+        assert out.count() == 205
+        rejected = out.filter(F.col("status") == "rejected").select(
+            "url", "error_message", "bucket"
+        )
+        assert sorted(tuple(r) for r in rejected.collect()) == sorted(
+            (u, "unsupported payload type", N_BUCKETS - 1) for u in junk_urls
+        )
+        assert output_is_complete(spark, paths["output"], inp)
+
+        lineage = spark.read.parquet(paths["lineage"]).collect()
+        assert sum(r.n_docs for r in lineage) == 205
+        assert sum(r.n_ok for r in lineage) == 200
+        assert sum(r.n_failed for r in lineage) == 0
+        assert sum(r.n_rejected for r in lineage) == 5
+        for r in lineage:
+            assert r.n_docs == r.n_ok + r.n_failed + r.n_rejected, r
+        only_rejected = [r for r in lineage if r.bucket == N_BUCKETS - 1]
+        assert [(r.status, r.n_docs, r.n_rejected) for r in only_rejected] == [
+            ("done", 5, 5)
+        ]
+        assert done_buckets(spark, paths["lineage"]) == list(range(N_BUCKETS))
+        assert audit_buckets(spark, paths["output"], paths["lineage"]) == []
+        rerun = run_pipeline(
+            spark, inp, paths["output"], paths["lineage"], n_buckets=N_BUCKETS
+        )
+        assert (rerun["buckets_processed"], rerun["docs"]) == (0, 0)
 
     def test_rerun_under_other_bucket_count_refused(self, spark, corpus_path, paths):
         """Lineage records the url-hash modulus. A resume under another

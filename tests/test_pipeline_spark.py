@@ -5,6 +5,8 @@ Byte-identical extracted text per url between the Spark pipeline
 oracle; built-in assembly (A1) parity; admission; error-row semantics.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -14,7 +16,6 @@ from ocr_spark.operators import (
     extract_pages,
     extract_spans,
 )
-from ocr_spark.functions import payload_kind
 
 
 @pytest.fixture(scope="module")
@@ -114,14 +115,6 @@ class TestExtractDocuments:
         assert kinds.get("html", 0) > 200
         assert kinds.get("pdf", 0) > 10
 
-    def test_columnar_kind_matches_python_sniff(self, spark, docs):
-        """The Catalyst payload router and textops.sniff_kind agree."""
-        from ocr_spark.textops import sniff_kind
-
-        with_kind = docs.withColumn("kind", payload_kind()).select("url", "kind", "html")
-        for row in with_kind.limit(50).collect():
-            assert row.kind == sniff_kind(row.html), row.url
-
     def test_partition_spread(self, spark, docs):
         """url-hash repartitioning spreads rows across partitions —
         no partition owns more than ~3x the fair share (Zipf hosts
@@ -135,7 +128,8 @@ class TestExtractDocuments:
         assert max(counts) <= 3 * (300 / 8)
 
     def test_error_rows_not_exceptions(self, spark):
-        """Poison payloads produce failed rows, not job failures."""
+        """Poison payloads produce rejected rows, not job failures and
+        not dropped rows."""
         rows = [
             ("u://ok", b"<html><body><p>fine words here</p></body></html>"),
             ("u://garbage", b"\x00\x01\x02 not anything"),
@@ -145,11 +139,58 @@ class TestExtractDocuments:
         df = spark.createDataFrame(rows, "url string, html binary")
         out = extract_documents(df).collect()
         by_url = {r.url: r for r in out}
+        assert len(out) == len(rows) == len(by_url)
         assert by_url["u://ok"].status == "completed"
-        # unknown payloads are dropped at admission (F3) — they never
-        # reach the UDF, mirroring the reference's content-type reject
-        assert "u://garbage" not in by_url
-        assert "u://empty" not in by_url
+        # unknown payloads fail admission (F3), the reference's
+        # content-type reject: one rejected row each, with the reason
+        for url, payload in rows[1:]:
+            r = by_url[url]
+            assert (r.kind, r.status, r.error_message) == (
+                "unknown", "rejected", "unsupported payload type"
+            ), url
+            assert (r.text, r.content_hash, r.n_pages, r.chars_out) == (None, None, 0, 0)
+            assert r.bytes_in == len(payload or b""), url
+
+    def test_rejected_rows_across_outputs(self, spark):
+        """A rejected document has one page-1 row carrying its status and
+        reason, and no span rows, like a failed one."""
+        rows = [
+            ("u://ok", b"<html><body><p>fine words here</p></body></html>"),
+            ("u://garbage", b"\x00\x01\x02 not anything"),
+        ]
+        df = spark.createDataFrame(rows, "url string, html binary")
+        pages = {r.url: r for r in extract_pages(df).collect()}
+        assert (pages["u://garbage"].page_number, pages["u://garbage"].status) == (
+            1, "rejected"
+        )
+        assert pages["u://garbage"].error_message == "unsupported payload type"
+        assert pages["u://garbage"].content is None
+        assert {r.url for r in extract_spans(df).collect()} == {"u://ok"}
+
+    def test_admit_cuts_oversized_payload(self, spark, monkeypatch):
+        """admit ships a payload over MAX_PDF_BYTES as its first
+        SNIFF_BYTES, with its true length beside it; the kernel rejects
+        it on that length."""
+        from ocr_spark.operators import extract as extract_module
+
+        monkeypatch.setattr(extract_module, "MAX_PDF_BYTES", 4096)
+        big = b"<html><body><p>" + b"w " * 3000 + b"</p></body></html>"
+        df = spark.createDataFrame(
+            [("u://big", big), ("u://small", b"<p>x</p>")], "url string, html binary"
+        )
+        got = {
+            r.url: (r.shipped, r.bytes_in, r.head)
+            for r in extract_module.admit(df)
+            .select(
+                "url",
+                F.length("html").alias("shipped"),
+                "bytes_in",
+                F.substring("html", 1, 15).alias("head"),
+            )
+            .collect()
+        }
+        assert got["u://big"] == (1024, len(big), big[:15])
+        assert got["u://small"] == (8, 8, b"<p>x</p>")
 
 
 class TestAssembly:
@@ -253,14 +294,17 @@ def test_shape_parity_across_outputs(spark, docs):
 
 class TestPlanShape:
     def test_admission_filter_pushed_to_scan(self, spark, corpus_path):
-        """The length() predicate must appear in the scan's pushed or
-        post-scan filters, not after a Python stage."""
+        """The admission guard is a JVM projection over the scan: no
+        Python stage evaluates it and no Filter drops a row."""
         from ocr_spark.operators.extract import admit
 
-        df = admit(spark.read.parquet(corpus_path))
+        docs = spark.read.parquet(corpus_path)
+        df = admit(docs)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        assert "Filter" in plan
+        assert not re.search(r"\bFilter\b", plan), plan  # not DataFilters etc.
+        assert "length(html#" in plan, plan
+        assert df.count() == docs.count()
 
     def test_single_shuffle_in_extract(self, spark, corpus_path):
         """The scan strategy must not shuffle AT ALL (narrow coalesce

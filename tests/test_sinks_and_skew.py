@@ -25,16 +25,18 @@ def _corpus(spark, tmp_path, n=200, seed=5):
 
 
 def test_quarantine_rejects(spark, tmp_path):
+    from ocr_spark.operators import extract_documents
     from ocr_spark.sources import sinks
 
     good = _corpus(spark, tmp_path, n=50)
     bad = spark.createDataFrame(
         [("bad://1", bytearray(b"\x00\x01binary-junk"))], "url string, html binary"
     )
-    n = sinks.quarantine_rejects(good.unionByName(bad, allowMissingColumns=True).select("url", "html"), str(tmp_path / "q"))
+    docs = good.select("url", "html").unionByName(bad)
+    n = sinks.quarantine_rejects(extract_documents(docs), str(tmp_path / "q"))
     assert n == 1
-    row = spark.read.parquet(str(tmp_path / "q")).first()
-    assert row.url == "bad://1" and row.reject_reason == "unsupported payload type"
+    rows = spark.read.parquet(str(tmp_path / "q")).collect()
+    assert [tuple(r) for r in rows] == [("bad://1", "unsupported payload type", 13)]
 
 
 def test_job_entrypoint_cli(tmp_path):
@@ -71,6 +73,47 @@ def test_job_entrypoint_cli(tmp_path):
     assert sum(r["n_docs"] for r in yt) == 80
     assert all(0 < r["yield_ppm"] <= 1_000_000 for r in yt)
     assert all(r["chars_out"] <= r["bytes_in"] for r in yt)
+
+
+def test_job_cli_refuses_other_bucket_count(tmp_path):
+    """A rerun under another --buckets than the lineage was written
+    with ends with one error line and exit status 1, not a traceback."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.corpus import write_corpus
+
+    inp = str(tmp_path / "in.parquet")
+    write_corpus(inp, 20, seed=9)
+    lin = tmp_path / "lineage"
+    lin.mkdir()
+    pq.write_table(
+        pa.table({
+            "run_id": ["r1"],
+            "bucket": pa.array([0], pa.int32()),
+            "n_buckets": pa.array([8], pa.int32()),
+            "status": ["done"],
+            "finished_at": pa.array(
+                [datetime.now(timezone.utc)], pa.timestamp("us", tz="UTC")
+            ),
+        }),
+        str(lin / "part-0.parquet"),
+    )
+    cmd = [
+        sys.executable, os.path.join(REPO, "jobs", "extract.py"),
+        "--input", inp, "--output", str(tmp_path / "out"),
+        "--lineage", str(lin), "--buckets", "4",
+    ]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    r = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=600)
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert "Traceback" not in r.stderr, r.stderr[-2000:]
+    errors = [line for line in r.stderr.splitlines() if line.startswith("error: ")]
+    assert len(errors) == 1, r.stderr[-2000:]
+    assert "n_buckets=8" in errors[0] and "n_buckets=4" in errors[0], errors
+    assert r.stdout == ""
 
 
 # ---------------------------------------------------------------------------
