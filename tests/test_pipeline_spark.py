@@ -169,8 +169,8 @@ class TestExtractDocuments:
 
     def test_admit_cuts_oversized_payload(self, spark, monkeypatch):
         """admit ships a payload over MAX_PDF_BYTES as its first
-        SNIFF_BYTES, with its true length beside it; the kernel rejects
-        it on that length."""
+        SNIFF_BYTES, with its true length beside it for the kernel's
+        size caps (TestAdmission in test_extractors.py)."""
         from ocr_spark.operators import extract as extract_module
 
         monkeypatch.setattr(extract_module, "MAX_PDF_BYTES", 4096)
