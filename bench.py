@@ -218,16 +218,11 @@ def _breakdown_worker(width: int) -> None:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators import extract_documents
-    from ocr_spark.operators.extract import (
-        ADMITTED_COLUMNS,
-        EXTRACT_SCHEMA,
-        admit,
-        extract_batch,
-    )
     from ocr_spark.session import get_spark
 
     spark = get_spark(app_name=f"ocr_spark-breakdown-{width}", cores=width)
     job = _scale_job(spark, _bench_corpus_path(), SCALE_REPEAT)
+    scan_splits = job.rdd.getNumPartitions()
 
     def scan():
         # sum(length) defeats the parquet-stats count shortcut: the
@@ -235,14 +230,9 @@ def _breakdown_worker(width: int) -> None:
         return job.select(F.sum(F.length("html"))).first()
 
     def noshuffle():
-        # scan → admission → Arrow extraction with NO exchange: the
-        # full job minus the url-hash repartition
-        return (
-            admit(job)
-            .select(*ADMITTED_COLUMNS)
-            .mapInPandas(extract_batch, schema=EXTRACT_SCHEMA)
-            .count()
-        )
+        # scan → admission → Arrow extraction with NO exchange and no
+        # merge: a coalesce to the scan's own split count keeps it
+        return extract_documents(job, n_partitions=scan_splits).count()
 
     def full():
         return extract_documents(job).count()

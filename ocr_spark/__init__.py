@@ -14,7 +14,7 @@ Layout:
     pdf_extract    pure-Python PDF content-stream parser
     corpus         seeded synthetic corpus generator (full input shape)
     operators/     Spark-side pipeline: admission, url-hash repartitioning, extraction, assembly
-    plans/         lineage/checkpoint table + resume anti-join
+    plans/         lineage/checkpoint table + resume filter and audit
     functions/     column-expression helpers (url bucket, salted aggregation) and the admission limits
 
 Importing the package also stops the per-task re-read of zip archives

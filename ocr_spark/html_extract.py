@@ -18,7 +18,7 @@ from __future__ import annotations
 import html as _htmllib
 import re
 from dataclasses import dataclass, field
-from typing import List, Optional
+from typing import List, Tuple
 
 # Tags that start/end a text block.
 _BLOCK_TAGS = frozenset(
@@ -283,7 +283,19 @@ def classify(blocks: List[Block]) -> List[Block]:
     return content
 
 
-def html_extract(payload: bytes, url: Optional[str] = None) -> Extracted:
+def join_spans(parts: List[Tuple[int, str, str]]) -> Tuple[str, List[dict]]:
+    """Join ``(page, kind, text)`` parts with '\\n\\n' (reference
+    assembly rule A1); returns the text and one span per part locating
+    it there."""
+    spans = []
+    offset = 0
+    for page, kind, part in parts:
+        spans.append({"page": page, "start": offset, "length": len(part), "kind": kind})
+        offset += len(part) + 2
+    return "\n\n".join(part for _, _, part in parts), spans
+
+
+def html_extract(payload: bytes) -> Extracted:
     """Extract main content from an HTML payload.
 
     Returns text = content blocks joined with '\\n\\n' (reference
@@ -293,21 +305,9 @@ def html_extract(payload: bytes, url: Optional[str] = None) -> Extracted:
     html_text = _decode(payload)
     blocks = tokenize_blocks(html_text)
     content = classify(blocks)
-
-    spans = []
-    offset = 0
-    for idx, b in enumerate(content):
-        spans.append(
-            {
-                "page": 1,
-                "start": offset,
-                "length": len(b.text),
-                "kind": "heading" if b.heading else "text",
-            }
-        )
-        offset += len(b.text) + (2 if idx < len(content) - 1 else 0)
-
-    text = "\n\n".join(b.text for b in content)
+    text, spans = join_spans(
+        [(1, "heading" if b.heading else "text", b.text) for b in content]
+    )
     metrics = {
         "n_blocks": len(blocks),
         "n_content_blocks": len(content),

@@ -5,7 +5,8 @@ Replaces the reference's queue/worker/per-page-HTTP pipeline
 Arrow-batched ``mapInPandas`` over the documents table:
 
     scan(parquet/iceberg) -> admit: size guard (JVM, no sniff)
-      -> balance: coalesce scan splits, or an xxhash64(url) repartition
+      -> balance: coalesce scan splits, an xxhash64(url) repartition,
+         or run_pipeline's exchange on the url-hash bucket
       -> mapInPandas(extract_batch)  # the only Python on the hot path
       -> per-doc rows (url, status, text, hash, metrics, partition_id)
 
@@ -19,7 +20,8 @@ core/error_handler.py:87-193) — instead of task retries or a silent
 drop: every input row comes out as one document row.
 
 Three output shapes, each a thin projection of that kernel behind one
-balance helper (:func:`_balanced_map`):
+plan builder (:func:`_balanced_map`), which ``run_pipeline`` and the
+stream build on too:
   * extract_documents: one row per document, text fully assembled
     inside the UDF (pages joined '\\n\\n').
   * extract_pages: one row per page (PDF fan-out, reference X1
@@ -215,7 +217,8 @@ def admit(df: DataFrame) -> DataFrame:
     SNIFF_BYTES that ``sniff_kind`` reads, so a huge payload never
     crosses the Arrow boundary. Every row is kept: :func:`_extract`
     applies the kind check and per-kind caps (reference F1/F3) and
-    rejects with a reason. Pass :data:`ADMITTED_COLUMNS` to the UDF."""
+    rejects with a reason. :func:`_balanced_map` passes
+    :data:`ADMITTED_COLUMNS` to the UDF."""
     size = F.coalesce(F.length("html"), F.lit(0))
     guarded = F.when(size > MAX_PDF_BYTES, F.substring("html", 1, SNIFF_BYTES))
     return df.withColumn("bytes_in", size).withColumn(
@@ -229,26 +232,32 @@ def admit(df: DataFrame) -> DataFrame:
 SCAN_OVERSUB = 4
 
 
+def _balance(
+    n_partitions: Optional[int], strategy: str
+) -> Callable[[DataFrame], DataFrame]:
+    """The balance step of a strategy (described on
+    :func:`extract_documents`)."""
+    if strategy == "scan":
+        return lambda d: d.coalesce(
+            n_partitions
+            or SCAN_OVERSUB * d.sparkSession.sparkContext.defaultParallelism
+        )
+    if n_partitions:
+        return lambda d: d.repartition(n_partitions, F.xxhash64("url"))
+    return lambda d: d.repartition(F.xxhash64("url"))
+
+
 def _balanced_map(
     df: DataFrame,
-    batch_fn: Callable,
-    schema: str,
-    n_partitions: Optional[int],
-    strategy: str,
+    balance: Callable[[DataFrame], DataFrame],
+    batch_fn: Callable = extract_batch,
+    schema: str = EXTRACT_SCHEMA,
 ) -> DataFrame:
-    """Admission guard -> partition balance -> one mapInPandas (the
-    strategies are described on :func:`extract_documents`)."""
+    """The one extraction plan, which every path builds: admission
+    guard -> :data:`ADMITTED_COLUMNS` -> ``balance`` (a strategy's
+    step, or ``run_pipeline``'s bucket exchange) -> one mapInPandas."""
     admitted = admit(df).select(*ADMITTED_COLUMNS)
-    if strategy == "scan":
-        admitted = admitted.coalesce(
-            n_partitions
-            or SCAN_OVERSUB * df.sparkSession.sparkContext.defaultParallelism
-        )
-    elif n_partitions:
-        admitted = admitted.repartition(n_partitions, F.xxhash64("url"))
-    else:
-        admitted = admitted.repartition(F.xxhash64("url"))
-    return admitted.mapInPandas(batch_fn, schema=schema)
+    return balance(admitted).mapInPandas(batch_fn, schema=schema)
 
 
 def extract_documents(
@@ -293,7 +302,7 @@ def extract_documents(
         if max_pages == MAX_PDF_PAGES
         else partial(extract_batch, max_pages=max_pages)
     )
-    return _balanced_map(df, batch_fn, EXTRACT_SCHEMA, n_partitions, strategy)
+    return _balanced_map(df, _balance(n_partitions, strategy), batch_fn)
 
 
 def extract_spans(
@@ -306,7 +315,7 @@ def extract_spans(
     shape is identical to the document path (the span fan-out happens
     inside the Arrow batch, no extra shuffle)."""
     return _balanced_map(
-        df, extract_spans_batch, SPANS_SCHEMA, n_partitions, strategy
+        df, _balance(n_partitions, strategy), extract_spans_batch, SPANS_SCHEMA
     )
 
 
@@ -315,7 +324,7 @@ def extract_pages(
 ) -> DataFrame:
     """Page-level variant feeding the built-in assembly (A1)."""
     return _balanced_map(
-        df, extract_pages_batch, PAGES_SCHEMA, n_partitions, "shuffle"
+        df, _balance(n_partitions, "shuffle"), extract_pages_batch, PAGES_SCHEMA
     )
 
 

@@ -25,7 +25,7 @@ import re
 import zlib
 from typing import Dict, List, Optional, Tuple
 
-from .html_extract import Extracted
+from .html_extract import Extracted, join_spans
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n")
@@ -92,10 +92,13 @@ def _page_order(objects: Dict[int, Tuple[bytes, Optional[bytes]]]) -> List[int]:
             break
 
     ordered: List[int] = []
+    seen = set()
 
     def walk(node: int, depth: int = 0) -> None:
-        if depth > 32 or node not in objects:
+        # each node once: a shared /Kids node is not walked once per path
+        if depth > 32 or node in seen or node not in objects:
             return
+        seen.add(node)
         body, _ = objects[node]
         if _TYPE_PAGES_RE.search(body):
             km = _KIDS_RE.search(body)
@@ -413,20 +416,7 @@ def pdf_assemble(pages: List[str]) -> Extracted:
     """Assemble per-page texts into a document: non-empty pages joined
     with '\\n\\n' (assembly rule A1, reference
     core/task_manager.py:542), with one span per non-empty page."""
-    spans = []
-    offset = 0
-    non_empty = [(i + 1, p) for i, p in enumerate(pages) if p]
-    for idx, (page_no, page_text) in enumerate(non_empty):
-        spans.append(
-            {
-                "page": page_no,
-                "start": offset,
-                "length": len(page_text),
-                "kind": "page",
-            }
-        )
-        offset += len(page_text) + (2 if idx < len(non_empty) - 1 else 0)
-    text = "\n\n".join(p for _, p in non_empty)
+    text, spans = join_spans([(i, "page", p) for i, p in enumerate(pages, 1) if p])
     metrics = {
         "n_pages": len(pages),
         "n_empty_pages": sum(1 for p in pages if not p),
@@ -435,7 +425,7 @@ def pdf_assemble(pages: List[str]) -> Extracted:
     return Extracted(text=text, spans=spans, metrics=metrics)
 
 
-def pdf_extract(pdf: bytes, url: Optional[str] = None) -> Extracted:
+def pdf_extract(pdf: bytes) -> Extracted:
     """Extract a PDF document: :func:`pdf_extract_pages` then
     :func:`pdf_assemble`."""
     return pdf_assemble(pdf_extract_pages(pdf))

@@ -13,10 +13,12 @@ resume contract (plans/lineage.py): kill the query, restart it with
 the same checkpoint dir, and only unprocessed files are extracted.
 
 Scale notes: the extraction is stateless (no watermark or state store
-needed), so the plan is scan -> admission guard -> MapInPandas per
-micro-batch; throughput equals the batch path's. File-source listing
-cost is the one new scale concern — at 10^12 rows use fewer, larger
-files and ``maxFilesPerTrigger`` to bound micro-batch size.
+needed), so the plan is the batch path's own: ``extract_documents``
+with the scan strategy over the file stream (admission guard ->
+coalesce -> MapInPandas per micro-batch); throughput equals the batch
+path's. File-source listing cost is the one new scale concern — at
+10^12 rows use fewer, larger files and ``maxFilesPerTrigger`` to bound
+micro-batch size.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import ADMITTED_COLUMNS, EXTRACT_SCHEMA, admit, extract_batch
+from ..operators.extract import extract_documents
 from .metrics import _file_stream
 
 # Input schema of the payload table (file streams cannot infer).
@@ -34,11 +36,9 @@ PAYLOAD_SCHEMA = "url string, html binary"
 
 def extraction_stream(spark: SparkSession, payload_path: str) -> DataFrame:
     """Streaming DataFrame of extraction result rows over a payload
-    directory. Same admission guard and Arrow-batched extractor as
-    the batch path — the plan differs only in its source."""
-    stream = _file_stream(spark, payload_path, PAYLOAD_SCHEMA)
-    admitted = admit(stream).select(*ADMITTED_COLUMNS)
-    return admitted.mapInPandas(extract_batch, schema=EXTRACT_SCHEMA)
+    directory: :func:`extract_documents` over a file stream, so the
+    plan differs from the batch path only in its source."""
+    return extract_documents(_file_stream(spark, payload_path, PAYLOAD_SCHEMA))
 
 
 def run_extraction_stream(

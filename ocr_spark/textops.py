@@ -295,8 +295,6 @@ def sniff_kind(payload: Optional[bytes]) -> str:
     if head.startswith(b"%PDF-"):
         return "pdf"
     low = head[:256].lower()
-    if low.startswith(b"<!doctype") or low.startswith(b"<html") or b"<html" in low:
-        return "html"
-    if low.startswith(b"<"):
+    if low.startswith(b"<") or b"<html" in low:
         return "html"
     return "unknown"

@@ -27,3 +27,27 @@ def corpus_path(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("corpus") / "documents.parquet")
     write_corpus(path, 300, seed=42)
     return path
+
+
+@pytest.fixture()
+def lineage_done(spark):
+    """``lineage_done(path, ids, n_buckets)`` writes a lineage table
+    whose only rows mark the ``id`` column of the DataFrame ``ids``
+    done under ``n_buckets``."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans import LINEAGE_SCHEMA
+
+    def write(path, ids, n_buckets):
+        given = {
+            "bucket": F.col("id"),
+            "n_buckets": F.lit(n_buckets),
+            "status": F.lit("done"),
+            "finished_at": F.current_timestamp(),
+        }
+        columns = [c.split() for c in LINEAGE_SCHEMA.split(", ")]
+        ids.select(
+            *(given.get(c, F.lit(None)).cast(t).alias(c) for c, t in columns)
+        ).write.parquet(path)
+
+    return write

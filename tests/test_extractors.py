@@ -211,6 +211,26 @@ class TestPdfExtract:
     def test_garbage_returns_empty(self):
         assert pdf_extract(b"%PDF-1.4 garbage").text == ""
 
+    def test_shared_kids_chain_visits_each_node_once(self):
+        """A /Pages chain whose every node lists its child twice reaches
+        the one page along 2^depth paths; walking each node once lists
+        it once, in time linear in the chain."""
+        import time
+
+        depth = 24
+        out = b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        for node in range(2, 2 + depth):
+            kid = f"{node + 1} 0 R"
+            out += f"{node} 0 obj\n<< /Type /Pages /Kids [{kid} {kid}] >>\nendobj\n".encode()
+        page, content = 2 + depth, 3 + depth
+        out += (
+            f"{page} 0 obj\n<< /Type /Page /Contents {content} 0 R >>\nendobj\n"
+            f"{content} 0 obj\n<< >>\nstream\nBT (only) Tj ET\nendstream\nendobj\n"
+        ).encode()
+        t0 = time.monotonic()
+        assert pdf_extract_pages(out) == ["only"]
+        assert time.monotonic() - t0 < 5.0
+
     def test_many_seeds_roundtrip(self):
         for seed in range(40):
             rng = random.Random(1000 + seed)

@@ -15,12 +15,7 @@ from ocr_spark.plans import (
     pending_after_resume,
     run_pipeline,
 )
-from ocr_spark.plans.lineage import (
-    ISIN_MAX_BUCKETS,
-    _filter_not_in_buckets,
-    done_buckets,
-    output_is_complete,
-)
+from ocr_spark.plans.lineage import _in_buckets, done_buckets, output_is_complete
 
 N_BUCKETS = 16
 
@@ -160,6 +155,23 @@ class TestRunPipeline:
         )
         new = [s for s in sc.getRDDStorageInfo() if s.id() not in before]
         assert len(new) == 0, [str(s) for s in new]
+
+    def test_lineage_appends_write_one_file_each(self, spark, corpus_path, paths):
+        """A cold run, an audit that finds one lost bucket and the
+        resume that redoes it append lineage three times, one file
+        each: every later run lists and reads all of them."""
+        import glob
+        import os
+        import shutil
+
+        out, lin = paths["output"], paths["lineage"]
+        run_pipeline(spark, corpus_path, out, lin, n_buckets=N_BUCKETS, n_partitions=8)
+        shutil.rmtree(os.path.join(out, "bucket=5"))
+        assert audit_buckets(spark, out, lin) == [5]
+        assert run_pipeline(spark, corpus_path, out, lin, n_buckets=N_BUCKETS)[
+            "buckets_processed"
+        ] == 1
+        assert len(glob.glob(os.path.join(lin, "*.parquet"))) == 3
 
     @pytest.mark.parametrize("n_partitions", [None, 8, 32])
     def test_one_file_per_bucket_same_rows(
@@ -342,29 +354,44 @@ class TestPendingAfterResume:
         )
         assert pending.count() == 300
 
-    def test_anti_join_is_broadcast(self, spark, corpus_path, paths):
-        """Above ISIN_MAX_BUCKETS done ids the resume filter must
-        broadcast the done-set, not shuffle the documents table; at or
-        below it (the real done-set here) it must compile to a plain
-        filter with no join at all."""
-        run_pipeline(
-            spark, corpus_path, paths["output"], paths["lineage"], n_buckets=8
-        )
+    @pytest.mark.parametrize("n_done,n_buckets", [(64, 128), (10_001, 16_384)])
+    def test_done_filter_has_no_join(
+        self, spark, corpus_path, tmp_path, lineage_done, n_done, n_buckets
+    ):
+        """Buckets 0 .. n_done - 1 done: the resume filter is one row
+        predicate at any done-set size, with no join and no exchange,
+        and keeps exactly the rows of the other buckets."""
+        lin = str(tmp_path / "lineage")
+        lineage_done(lin, spark.range(n_done), n_buckets)
         docs = spark.read.parquet(corpus_path)
-        pending = _filter_not_in_buckets(
-            spark,
-            docs.withColumn("bucket", url_bucket(8)),
-            list(range(ISIN_MAX_BUCKETS + 1)),
-        )
+        pending = pending_after_resume(spark, docs, lin, n_buckets=n_buckets)
         plan = pending._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert "Join" not in plan and "Exchange" not in plan, plan
+        want = docs.filter(url_bucket(n_buckets) >= n_done).select("url")
+        assert sorted(pending.select("url").collect()) == sorted(want.collect())
 
-        pending_isin = pending_after_resume(
-            spark, docs, paths["lineage"], n_buckets=8
-        )
-        plan2 = pending_isin._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan2
-        assert pending_isin.count() == 0  # everything done
+    def test_one_bucket_left_of_65536(self, spark, corpus_path, tmp_path, lineage_done):
+        """65,535 of 65,536 buckets done: the pending rows are exactly
+        the input rows of the one bucket left, and the filter's plan
+        is built in well under the seconds an isin list took."""
+        import time
+
+        n_buckets = 1 << 16
+        docs = spark.read.parquet(corpus_path)
+        left = docs.select(url_bucket(n_buckets).alias("b")).first().b
+        lin = str(tmp_path / "lineage")
+        lineage_done(lin, spark.range(n_buckets).filter(F.col("id") != left), n_buckets)
+        done = done_buckets(spark, lin)
+        assert len(done) == n_buckets - 1 and left not in done
+
+        pending = pending_after_resume(spark, docs, lin, n_buckets=n_buckets)
+        want = docs.filter(url_bucket(n_buckets) == left).select("url").collect()
+        assert want and sorted(pending.select("url").collect()) == sorted(want)
+
+        t0 = time.monotonic()  # the filter pending_after_resume builds
+        with_bucket = docs.withColumn("bucket", url_bucket(n_buckets))
+        with_bucket.filter(~_in_buckets(done))._jdf.queryExecution().executedPlan()
+        assert time.monotonic() - t0 < 2.0
 
     def test_done_set_frozen_at_plan_time(self, spark, corpus_path, paths):
         """Regression: actions evaluated after this run appends its own

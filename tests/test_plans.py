@@ -180,38 +180,20 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_bucket_right")
 
 
-def test_resume_antijoin_no_shuffle_on_big_side(spark, tmp_path):
-    """The resume filter is either an isin predicate (no join) or a
-    broadcast anti-join — the input table must never shuffle."""
+@pytest.mark.parametrize("n_done", [64, 10_001])
+def test_resume_filter_no_join_no_exchange(spark, tmp_path, lineage_done, n_done):
+    """The resume filter is one row predicate at any done-set size: no
+    join, and the input table never shuffles."""
     from ocr_spark.corpus import write_corpus
-    from ocr_spark.functions import url_bucket
-    from ocr_spark.plans.lineage import (
-        ISIN_MAX_BUCKETS,
-        _filter_not_in_buckets,
-        pending_after_resume,
-        run_pipeline,
-    )
+    from ocr_spark.plans.lineage import pending_after_resume
 
-    inp = str(tmp_path / "in.parquet")
+    inp, lin = str(tmp_path / "in.parquet"), str(tmp_path / "lin")
     write_corpus(inp, 60, seed=13)
-    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
-    run_pipeline(spark, inp, out, lin, n_buckets=8)
-
-    docs = spark.read.parquet(inp)
-    pending_isin = pending_after_resume(spark, docs, lin, 8)
-    assert "Join" not in _plan(pending_isin)
-    assert "Exchange" not in _plan(pending_isin)
-
-    pending_anti = _filter_not_in_buckets(
-        spark,
-        docs.withColumn("bucket", url_bucket(8)),
-        list(range(ISIN_MAX_BUCKETS + 1)),
-    )
-    plan = _plan(pending_anti)
-    assert "BroadcastHashJoin LeftAnti" in plan.replace("  ", " ") or (
-        "LeftAnti" in plan and "BroadcastExchange" in plan
-    ), plan
-    assert "SortMergeJoin" not in plan
+    lineage_done(lin, spark.range(n_done), 16_384)
+    pending = pending_after_resume(spark, spark.read.parquet(inp), lin, 16_384)
+    plan = _plan(pending)
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_spread_cpu_widens_narrow_scan(spark, corpus_path):
