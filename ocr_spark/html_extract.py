@@ -17,8 +17,8 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
-from dataclasses import dataclass, field
-from typing import List, Tuple
+from functools import cached_property
+from typing import Callable, List
 
 # Tags that start/end a text block.
 _BLOCK_TAGS = frozenset(
@@ -61,28 +61,32 @@ MIN_CONTENT_WORDS = 2
 MAX_LINK_DENSITY = 1.0 / 3.0
 
 
-@dataclass
-class Block:
-    text: str
-    tag: str
-    chars: int
-    link_chars: int
-    words: int
-    heading: bool
-    boiler: bool
-
-    @property
-    def link_density(self) -> float:
-        return (self.link_chars / self.chars) if self.chars else 0.0
-
-
-@dataclass
 class Extracted:
-    """Extraction result: assembled text + per-block spans + metrics."""
+    """Extraction result. ``text`` is assembled up front; ``spans`` (one
+    per ``(page, kind, text)`` part, located in ``text``) and
+    ``metrics`` are built from their callables on first read, so a
+    caller that wants only the text pays only for the text."""
 
-    text: str
-    spans: List[dict] = field(default_factory=list)
-    metrics: dict = field(default_factory=dict)
+    def __init__(
+        self, text: str, parts: Callable[[], list], metrics: Callable[[], dict]
+    ) -> None:
+        self.text = text
+        self._parts = parts
+        self._metrics = metrics
+
+    @cached_property
+    def spans(self) -> List[dict]:
+        # parts are joined with '\n\n' (reference assembly rule A1)
+        spans = []
+        offset = 0
+        for page, kind, part in self._parts():
+            spans.append({"page": page, "start": offset, "length": len(part), "kind": kind})
+            offset += len(part) + 2
+        return spans
+
+    @cached_property
+    def metrics(self) -> dict:
+        return self._metrics()
 
 
 def _decode(payload: bytes) -> str:
@@ -94,48 +98,70 @@ def _decode(payload: bytes) -> str:
         return payload.decode("utf-8", errors="replace")
 
 
-# Parsed-tag memo: raw tag slice -> (closing, tag, self_closing,
-# is_boiler, is_skip, is_block, is_heading). Tag markup repeats heavily
-# (every <p>, </p>, </a>… is the same string), so parsing each distinct
-# slice once roughly halves tokenizer time; entries are pure functions
-# of the slice, so the cache never changes results. Bounded to keep
-# unique attr-bearing tags (hrefs) from growing it without limit.
+# Context bits an open tag sets for its subtree (the stack restores
+# them on close): boilerplate, skipped (never content), heading.
+_BOILER, _SKIP, _HEADING = 1, 2, 4
+
+# What tokenize_blocks does at a tag, decided once per distinct raw tag
+# slice: open a non-block element, close one, open / close / self-close
+# a block element (each ends the open text block), a void or
+# unparseable tag (nothing), or a raw-text element (skip to its
+# closing tag). The last two leave the stack and the open block alone.
+_OPEN, _CLOSE, _OPEN_BLOCK, _CLOSE_BLOCK, _VOID_BLOCK, _VOID, _RAW = range(7)
+
+# Raw-text elements: their content is skipped straight to the closing
+# tag, matched ASCII-case-insensitively on the original string.
+_RAW_TEXT_CLOSE = {
+    tag: re.compile(f"</{tag}[^>]*>?", re.I | re.A)
+    for tag in ("script", "style", "textarea")
+}
+
+# Tag op memo: raw tag slice -> (op, tag, context bits). Tag markup
+# repeats heavily (every <p>, </p>, </a>… is the same string), so each
+# distinct slice is parsed once; entries are pure functions of the
+# slice, so the cache never changes results. Bounded to keep unique
+# attr-bearing tags (hrefs) from growing it without limit.
 _TAG_CACHE: dict = {}
 _TAG_CACHE_MAX = 100_000
+_NOT_A_TAG = (_VOID, "", 0)
 
 
-def _parse_tag(raw_tag: str):
+def _parse_tag(raw_tag: str) -> tuple:
     closing = raw_tag.startswith("/")
     body = raw_tag[1:] if closing else raw_tag
     m = _TAG_NAME_RE.match(body.strip())
     if not m:
-        parsed = None
+        entry = _NOT_A_TAG
     else:
         tag = m.group(0).lower()
-        self_closing = body.rstrip().endswith("/") or tag in _VOID_TAGS
-        attrs_text = body[m.end() :]
-        is_boiler = tag in _BOILER_CONTAINER_TAGS
-        if not is_boiler and ("class" in attrs_text or "id" in attrs_text):
-            for attr_m in _ATTR_RE.finditer(attrs_text):
-                name = attr_m.group(1).lower()
-                if name in ("class", "id", "role"):
-                    value = (attr_m.group(2) or "").strip("\"'")
-                    if value and _BOILER_ATTR_RE.search(value):
-                        is_boiler = True
-                        break
-        parsed = (
-            closing,
-            tag,
-            self_closing,
-            is_boiler,
-            tag in _SKIP_SUBTREE_TAGS,
-            tag in _BLOCK_TAGS,
-            tag in _HEADING_TAGS,
-        )
+        block = tag in _BLOCK_TAGS
+        if closing:
+            entry = (_CLOSE_BLOCK if block else _CLOSE, tag, 0)
+        elif tag in _RAW_TEXT_CLOSE:
+            entry = (_RAW, tag, 0)
+        elif body.rstrip().endswith("/") or tag in _VOID_TAGS:
+            entry = (_VOID_BLOCK if block else _VOID, tag, 0)
+        else:
+            bits = 0
+            if tag in _BOILER_CONTAINER_TAGS:
+                bits = _BOILER
+            elif "class" in body or "id" in body:
+                for attr_m in _ATTR_RE.finditer(body, m.end()):
+                    name = attr_m.group(1).lower()
+                    if name in ("class", "id", "role"):
+                        value = (attr_m.group(2) or "").strip("\"'")
+                        if value and _BOILER_ATTR_RE.search(value):
+                            bits = _BOILER
+                            break
+            if tag in _SKIP_SUBTREE_TAGS:
+                bits |= _SKIP
+            if tag in _HEADING_TAGS:
+                bits |= _HEADING
+            entry = (_OPEN_BLOCK if block else _OPEN, tag, bits)
     if len(_TAG_CACHE) >= _TAG_CACHE_MAX:
         _TAG_CACHE.clear()
-    _TAG_CACHE[raw_tag] = parsed
-    return parsed
+    _TAG_CACHE[raw_tag] = entry
+    return entry
 
 
 # One tokenizer step: the text run up to the next '<' (group 1), then a
@@ -147,44 +173,50 @@ _STEP_RE = re.compile(
     r"([^<]*)(?:<(?:(!--.*?(?:-->|\Z)|[!?][^>]*>?)|([^>]*)>))?", re.S
 )
 
-# Raw-text elements: their content is skipped straight to the closing
-# tag, matched ASCII-case-insensitively on the original string.
-_RAW_TEXT_CLOSE = {
-    tag: re.compile(f"</{tag}[^>]*>?", re.I | re.A)
-    for tag in ("script", "style", "textarea")
-}
-
-# The end of input acts as a closing block tag: it flushes the last
-# block, and its empty name matches nothing on the stack.
-_END_OF_INPUT = (True, "", False, False, False, True, False)
+# The end of input acts as a self-closing block tag: it flushes the
+# last block.
+_END_OF_INPUT = (_VOID_BLOCK, "", 0)
 
 
-def tokenize_blocks(html_text: str) -> List[Block]:
-    """Single forward scan over the markup producing flat text blocks.
+def tokenize_blocks(html_text: str) -> List[tuple]:
+    """Single forward scan over the markup producing flat text blocks,
+    each a ``(text, tag, chars, link_chars, words, heading, boiler)``
+    tuple.
 
     Text runs accumulate into the open block; a block tag (or the end
-    of input) flushes them into a :class:`Block` and resets the
-    heading/boiler context, which an opening block tag then sets anew.
+    of input) flushes them into a block and resets the heading/boiler
+    context, which an opening block tag then sets anew.
     """
-    blocks: List[Block] = []
+    blocks: List[tuple] = []
     parts: List[str] = []
     chars = link_chars = 0
-    block_tag, block_heading, block_boiler = "p", False, False
+    block_tag, block_bits = "p", 0
     link_depth = 0
-    in_skip = in_boiler = in_heading = False
-    # (tag, in_boiler, in_skip, in_heading) as they were before each
-    # open tag; closing a tag restores them.
+    ctx = 0  # context bits of the innermost open element
+    # (tag, ctx before it) per open element; closing a tag restores ctx.
     stack: List[tuple] = []
-    step = _STEP_RE.match
+    push = stack.append
+    # Times each tag is on the stack, kept from the first close that
+    # does not match the top: a close of a tag that is not open then
+    # costs O(1), not a scan of the stack. Well-nested markup never
+    # pays for it.
+    opened = None
     cache_get = _TAG_CACHE.get
     unescape = _htmllib.unescape
-    n = len(html_text)
-    i = 0
+    OPEN, CLOSE, OPEN_BLOCK, VOID_BLOCK, VOID, RAW = (
+        _OPEN, _CLOSE, _OPEN_BLOCK, _VOID_BLOCK, _VOID, _RAW
+    )
+    BOILER, SKIP, HEADING = _BOILER, _SKIP, _HEADING
+    # Each step starts where the last ended; after an empty step (the
+    # end of input, or a '<' that never closes) the scanner returns None.
+    step = _STEP_RE.scanner(html_text).match
 
-    while i <= n:
-        m = step(html_text, i)
-        text = m[1]
-        if text and not in_skip:
+    while True:
+        m = step()
+        if m is None:
+            break
+        text, comment, raw_tag = m.groups()
+        if text and not ctx & SKIP:
             if "&" in text:
                 text = unescape(text)
             if text:  # unescape can empty a run ("&#1;")
@@ -193,125 +225,104 @@ def tokenize_blocks(html_text: str) -> List[Block]:
                 chars += stripped_len
                 if link_depth:
                     link_chars += stripped_len
-                if in_boiler:
-                    block_boiler = True
-        i = m.end()
-        kind = m.lastindex
-        if kind == 2:  # comment or declaration
+                block_bits |= ctx & BOILER
+        if raw_tag is not None:
+            op, tag, bits = cache_get(raw_tag) or _parse_tag(raw_tag)
+        elif comment is not None:  # comment or declaration
             continue
-        if kind == 3:
-            raw_tag = m[3]
-            parsed = cache_get(raw_tag, False)
-            if parsed is False:
-                parsed = _parse_tag(raw_tag)
-            if parsed is None:
-                continue
         else:
-            parsed = _END_OF_INPUT
-            i = n + 1
-        closing, tag, self_closing, is_boiler, is_skip, is_block, is_heading = parsed
+            op, tag, bits = _END_OF_INPUT
 
-        if is_block:
+        if op == OPEN:
+            if tag == "a":
+                link_depth += 1
+            push((tag, ctx))
+            if opened is not None:
+                opened[tag] = opened.get(tag, 0) + 1
+            ctx |= bits
+            continue
+        if op >= VOID:
+            if op == RAW:
+                close = _RAW_TEXT_CLOSE[tag].search(html_text, m.end())
+                step = _STEP_RE.scanner(
+                    html_text, close.end() if close else len(html_text)
+                ).match
+            continue
+        if op != CLOSE:  # a block tag: the open block ends here
             if parts:
-                words = "".join(parts).split()
-                if words:
-                    blocks.append(
-                        Block(
-                            " ".join(words),
-                            block_tag,
-                            chars,
-                            link_chars,
-                            len(words),
-                            block_heading,
-                            block_boiler,
-                        )
-                    )
+                if chars:  # else every part is whitespace: no words
+                    words = "".join(parts).split()
+                    blocks.append((
+                        " ".join(words), block_tag, chars, link_chars, len(words),
+                        block_bits & HEADING != 0, block_bits & BOILER != 0,
+                    ))
                 parts = []
                 chars = link_chars = 0
-            if closing or self_closing:
-                block_heading = block_boiler = False
-            else:
+            if op == OPEN_BLOCK:
                 block_tag = tag
-                block_heading = is_heading or in_heading
-                block_boiler = is_boiler or in_boiler
+                block_bits = bits | ctx
+                push((tag, ctx))
+                if opened is not None:
+                    opened[tag] = opened.get(tag, 0) + 1
+                ctx |= bits
+                continue
+            block_bits = 0
+            if op == VOID_BLOCK:
+                continue
 
-        if closing:
-            if tag == "a" and link_depth:
-                link_depth -= 1
-            if stack and stack[-1][0] == tag:
-                _, in_boiler, in_skip, in_heading = stack.pop()
-            else:
-                # Unwind the stack to the nearest matching open tag.
-                for idx in range(len(stack) - 2, -1, -1):
-                    if stack[idx][0] == tag:
-                        _, in_boiler, in_skip, in_heading = stack[idx]
-                        del stack[idx:]
-                        break
+        # _CLOSE or _CLOSE_BLOCK: unwind to the nearest open tag of
+        # that name, if any.
+        if tag == "a" and link_depth:
+            link_depth -= 1
+        if stack and stack[-1][0] == tag:
+            ctx = stack.pop()[1]
+            if opened is not None:
+                opened[tag] -= 1
             continue
-
-        if is_skip and tag in _RAW_TEXT_CLOSE:
-            close = _RAW_TEXT_CLOSE[tag].search(html_text, i)
-            i = close.end() if close else n
-            continue
-        if self_closing:
-            continue
-        if tag == "a":
-            link_depth += 1
-        stack.append((tag, in_boiler, in_skip, in_heading))
-        if is_boiler:
-            in_boiler = True
-        if is_skip:
-            in_skip = True
-        if is_heading:
-            in_heading = True
+        if opened is None:
+            opened = {}
+            for top, _ in stack:
+                opened[top] = opened.get(top, 0) + 1
+        if opened.get(tag):
+            while True:
+                top, top_ctx = stack.pop()
+                opened[top] -= 1
+                if top == tag:
+                    ctx = top_ctx
+                    break
 
     return blocks
 
 
-def classify(blocks: List[Block]) -> List[Block]:
-    """Keep content blocks: not boilerplate-rooted, link density below
-    1/3, and either a heading or at least MIN_CONTENT_WORDS words."""
-    content = []
-    for b in blocks:
-        if b.boiler or b.tag == "title":
-            continue
-        if b.link_density > MAX_LINK_DENSITY:
-            continue
-        if not b.heading and b.words < MIN_CONTENT_WORDS:
-            continue
-        content.append(b)
-    return content
-
-
-def join_spans(parts: List[Tuple[int, str, str]]) -> Tuple[str, List[dict]]:
-    """Join ``(page, kind, text)`` parts with '\\n\\n' (reference
-    assembly rule A1); returns the text and one span per part locating
-    it there."""
-    spans = []
-    offset = 0
-    for page, kind, part in parts:
-        spans.append({"page": page, "start": offset, "length": len(part), "kind": kind})
-        offset += len(part) + 2
-    return "\n\n".join(part for _, _, part in parts), spans
+def classify(blocks: List[tuple]) -> List[tuple]:
+    """Keep content blocks: not boilerplate-rooted, not the title, link
+    density at most 1/3, and either a heading or at least
+    MIN_CONTENT_WORDS words."""
+    return [
+        b for b in blocks
+        if not b[6] and b[1] != "title"
+        and not (b[2] and b[3] / b[2] > MAX_LINK_DENSITY)
+        and (b[5] or b[4] >= MIN_CONTENT_WORDS)
+    ]
 
 
 def html_extract(payload: bytes) -> Extracted:
     """Extract main content from an HTML payload.
 
     Returns text = content blocks joined with '\\n\\n' (reference
-    assembly rule A1), spans locating each block in the output, and
-    extraction metrics.
+    assembly rule A1); spans locating each block in the text and
+    extraction metrics are built when read.
     """
-    html_text = _decode(payload)
-    blocks = tokenize_blocks(html_text)
+    blocks = tokenize_blocks(_decode(payload))
     content = classify(blocks)
-    text, spans = join_spans(
-        [(1, "heading" if b.heading else "text", b.text) for b in content]
+    text = "\n\n".join([b[0] for b in content])
+    return Extracted(
+        text,
+        lambda: [(1, "heading" if b[5] else "text", b[0]) for b in content],
+        lambda: {
+            "n_blocks": len(blocks),
+            "n_content_blocks": len(content),
+            "n_boiler_blocks": sum(1 for b in blocks if b[6]),
+            "chars_out": len(text),
+        },
     )
-    metrics = {
-        "n_blocks": len(blocks),
-        "n_content_blocks": len(content),
-        "n_boiler_blocks": sum(1 for b in blocks if b.boiler),
-        "chars_out": len(text),
-    }
-    return Extracted(text=text, spans=spans, metrics=metrics)

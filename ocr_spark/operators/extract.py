@@ -221,9 +221,8 @@ def admit(df: DataFrame) -> DataFrame:
     :data:`ADMITTED_COLUMNS` to the UDF."""
     size = F.coalesce(F.length("html"), F.lit(0))
     guarded = F.when(size > MAX_PDF_BYTES, F.substring("html", 1, SNIFF_BYTES))
-    return df.withColumn("bytes_in", size).withColumn(
-        "html", guarded.otherwise(F.col("html"))
-    )
+    # one projection: each withColumn call is analysed on its own
+    return df.withColumns({"bytes_in": size, "html": guarded.otherwise(F.col("html"))})
 
 
 # scan-strategy cap on the task count: coalesce merges scan partitions

@@ -23,11 +23,18 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Dict, List, Optional, Tuple
+from math import isfinite
+from typing import Dict, Iterator, List, Optional, Tuple
 
-from .html_extract import Extracted, join_spans
+from .html_extract import Extracted
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
+# An _OBJ_RE match is "obj" at a word boundary after whitespace, digits,
+# whitespace and digits, each run maximal: so it is found from its
+# "obj" (a fast literal search, where _OBJ_RE, led by \d, is tried at
+# every byte) by matching that shape backwards on the reversed file.
+_OBJ_END_RE = re.compile(rb"obj\b")
+_OBJ_HEAD_REVERSED_RE = re.compile(rb"\s+\d+\s+\d+")
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\s+\d+\s+R)")
@@ -48,39 +55,66 @@ _LINE_Y_TOLERANCE = 0.5
 MAX_INFLATED_BYTES = 64 * 1024 * 1024
 
 
-def _scan_objects(pdf: bytes) -> Dict[int, Tuple[bytes, Optional[bytes]]]:
-    """Map object number -> (dict/body bytes, raw stream bytes or None).
+def _object_headers(pdf: bytes) -> Iterator["re.Match"]:
+    """The matches of ``_OBJ_RE.finditer(pdf)``, found from each ``obj``:
+    two headers never overlap, since each is digits and whitespace up
+    to its own ``obj``."""
+    reversed_pdf = pdf[::-1]
+    n = len(pdf)
+    for o in _OBJ_END_RE.finditer(pdf):
+        head = _OBJ_HEAD_REVERSED_RE.match(reversed_pdf, n - o.start())
+        if head is not None:
+            yield _OBJ_RE.match(pdf, n - head.end())
+
+
+def _scan_objects(pdf: bytes) -> Dict[int, Tuple[memoryview, Optional[bytes]]]:
+    """Map object number -> (dict/body view, raw stream bytes or None).
 
     A linear scan for ``N G obj`` is more robust than trusting the xref
-    table and is O(file size).
+    table. An object runs to the next ``endobj``, or to the end of the
+    file. Bodies are zero-copy views into ``pdf``.
+
+    Each search finds the next ``endobj``, ``stream``, ``/Length`` or
+    ``endstream`` at or after a position that only grows, so its result
+    is kept until an object starts past it: the scan reads the file
+    about once even when no object ends. None of these keywords can
+    straddle the ``endobj`` that ends an object, so a match that starts
+    inside an object lies inside it.
     """
-    objects: Dict[int, Tuple[bytes, Optional[bytes]]] = {}
-    for m in _OBJ_RE.finditer(pdf):
-        num = int(m.group(1))
+    objects: Dict[int, Tuple[memoryview, Optional[bytes]]] = {}
+    view = memoryview(pdf)
+    n = len(pdf)
+    end = send = -1  # next endobj / endstream; n when there is none
+    sm = _STREAM_RE.search(pdf)
+    lm = _LENGTH_RE.search(pdf)
+    for m in _object_headers(pdf):
         start = m.end()
-        end = pdf.find(b"endobj", start)
-        if end == -1:
-            end = len(pdf)
-        body = pdf[start:end]
+        if end < start:
+            end = pdf.find(b"endobj", start)
+            if end == -1:
+                end = n
+        if sm is not None and sm.start() < start:
+            sm = _STREAM_RE.search(pdf, start)
         stream_data: Optional[bytes] = None
-        sm = _STREAM_RE.search(body)
-        if sm:
+        if sm is not None and sm.start() < end:
             data_start = sm.end()
-            lm = _LENGTH_RE.search(body[: sm.start()])
-            if lm:
-                length = int(lm.group(1))
-                stream_data = body[data_start : data_start + length]
+            if lm is not None and lm.start() < start:
+                lm = _LENGTH_RE.search(pdf, start)
+            if lm is not None and lm.start() < sm.start():
+                stream_data = pdf[data_start : min(data_start + int(lm[1]), end)]
             else:
-                send = body.find(b"endstream", data_start)
-                if send == -1:
-                    send = len(body)
-                stream_data = body[data_start:send].rstrip(b"\r\n")
-            body = body[: sm.start()]
-        objects[num] = (body, stream_data)
+                if send < data_start:
+                    send = pdf.find(b"endstream", data_start)
+                    if send == -1:
+                        send = n
+                stream_data = pdf[data_start : min(send, end)].rstrip(b"\r\n")
+            objects[int(m[1])] = (view[start : sm.start()], stream_data)
+        else:
+            objects[int(m[1])] = (view[start:end], None)
     return objects
 
 
-def _page_order(objects: Dict[int, Tuple[bytes, Optional[bytes]]]) -> List[int]:
+def _page_order(objects: Dict[int, Tuple[memoryview, Optional[bytes]]]) -> List[int]:
     """Page object numbers in document order via the /Pages tree; falls
     back to file order of /Type /Page objects."""
     catalog_pages: Optional[int] = None
@@ -134,7 +168,7 @@ def _inflate(data: bytes, budget: int) -> Optional[bytes]:
 
 
 def _content_streams(
-    page_body: bytes, objects: Dict[int, Tuple[bytes, Optional[bytes]]], budget: int
+    page_body: memoryview, objects: Dict[int, Tuple[memoryview, Optional[bytes]]], budget: int
 ) -> Tuple[List[bytes], int]:
     """The page's content streams, flate-decoded, and what is left of
     the document's inflate ``budget``."""
@@ -263,6 +297,24 @@ _ARRAY_ITEM_RE = re.compile(
 )
 _DICT_DELIM_RE = re.compile(rb"<<|>>")
 
+# A whole common command at once, tried while the operand stack is
+# empty: ``(lit) Tj`` (group 1, a literal as group 1 of _TOKEN_RE),
+# ``x y Td|TD`` (2-4), ``a b c d e f Tm`` (5-10) or ``T*`` (no group).
+# Numbers are atomic, so they keep the token loop's maximal munch
+# (``12 Td`` is one operand), and the operator must end where the
+# token loop's operator token would. Anything else, a comment between
+# tokens included, is left to the token loop.
+_WS = rb"[ \t\r\n\x00]*"
+_ANUM = rb"(?>" + _NUM + rb")"
+_FUSED_RE = re.compile(
+    _WS + rb"(?:\(([^\\()]*)\)" + _WS + rb"Tj"
+    rb"|(" + _ANUM + rb")" + _WS + rb"(" + _ANUM + rb")" + _WS + rb"(T[dD])"
+    rb"|T\*"
+    rb"|" + (rb"(" + _ANUM + rb")" + _WS) * 6 + rb"Tm"
+    rb")(?![A-Za-z'\"*])",
+    re.S,
+)
+
 
 def _skip_dict(data: bytes, i: int) -> int:
     """Index just past the ``>>`` closing a ``<<`` dictionary whose body
@@ -293,9 +345,33 @@ def _extract_runs(stream: bytes) -> List[Tuple[float, float, str]]:
     leading = 0.0
     in_text = False
     token = _TOKEN_RE.match
+    fused = _FUSED_RE.match
     i = 0
 
     while True:
+        if not stack:
+            f = fused(stream, i)
+            if f is not None:
+                i = f.end()
+                k = f.lastindex
+                if k == 1:
+                    if in_text:
+                        runs.append((cx, cy, f[1].decode("latin-1")))
+                elif k == 4:
+                    ty = float(f[3])
+                    lx += float(f[2])
+                    ly += ty
+                    cx, cy = lx, ly
+                    if f[4] == b"TD":
+                        leading = -ty
+                elif k is None:  # T*
+                    ly -= leading
+                    cx, cy = lx, ly
+                else:  # Tm
+                    lx = float(f[9])
+                    ly = float(f[10])
+                    cx, cy = lx, ly
+                continue
         m = token(stream, i)
         if m is None:
             break
@@ -378,17 +454,37 @@ def _extract_runs(stream: bytes) -> List[Tuple[float, float, str]]:
 
 def _runs_to_text(runs: List[Tuple[float, float, str]]) -> str:
     """Cluster runs into lines by y (tolerance), sort lines top-down and
-    runs left-to-right, join runs with '' and lines with '\\n'."""
+    runs left-to-right, join runs with '' and lines with '\\n'.
+
+    A run joins the first-made line within ``_LINE_Y_TOLERANCE`` of its
+    y, else makes a new one. So line ys differ pairwise by more than
+    the tolerance: a line at exactly y is the only match, and a unit
+    interval ``[k, k + 1)`` holds at most two lines. The tolerance (0.5)
+    is under one unit, so any other match lies in the unit intervals at
+    and next to y's. A non-finite y never
+    matches (its difference to anything is inf or nan), so it makes a
+    line of its own and is not indexed.
+    """
     if not runs:
         return ""
     lines: List[Tuple[float, List[Tuple[float, str]]]] = []
+    line_of: Dict[float, int] = {}  # finite line y -> index in lines
+    units: Dict[float, List[int]] = {}  # floor(y) -> indices of its lines
     for x, y, text in runs:
-        for ly, items in lines:
-            if abs(ly - y) <= _LINE_Y_TOLERANCE:
-                items.append((x, text))
-                break
-        else:
+        idx = line_of.get(y)
+        if idx is None and isfinite(y):
+            unit = y // 1.0
+            for k in (unit - 1.0, unit, unit + 1.0):
+                for j in units.get(k, ()):
+                    if abs(lines[j][0] - y) <= _LINE_Y_TOLERANCE and (idx is None or j < idx):
+                        idx = j
+            if idx is None:
+                line_of[y] = len(lines)
+                units.setdefault(unit, []).append(len(lines))
+        if idx is None:
             lines.append((y, [(x, text)]))
+        else:
+            lines[idx][1].append((x, text))
     lines.sort(key=lambda item: -item[0])
     out_lines = []
     for _, items in lines:
@@ -416,13 +512,16 @@ def pdf_assemble(pages: List[str]) -> Extracted:
     """Assemble per-page texts into a document: non-empty pages joined
     with '\\n\\n' (assembly rule A1, reference
     core/task_manager.py:542), with one span per non-empty page."""
-    text, spans = join_spans([(i, "page", p) for i, p in enumerate(pages, 1) if p])
-    metrics = {
-        "n_pages": len(pages),
-        "n_empty_pages": sum(1 for p in pages if not p),
-        "chars_out": len(text),
-    }
-    return Extracted(text=text, spans=spans, metrics=metrics)
+    text = "\n\n".join([p for p in pages if p])
+    return Extracted(
+        text,
+        lambda: [(i, "page", p) for i, p in enumerate(pages, 1) if p],
+        lambda: {
+            "n_pages": len(pages),
+            "n_empty_pages": sum(1 for p in pages if not p),
+            "chars_out": len(text),
+        },
+    )
 
 
 def pdf_extract(pdf: bytes) -> Extracted:

@@ -111,6 +111,27 @@ class TestHtmlExtract:
         html = b"<p>before the script</p><SCRIPT>x<p>no</p></ScRiPt ><p>after the script</p>"
         assert html_extract(html).text == "before the script\n\nafter the script"
 
+    def test_stray_closes_cost_constant_time(self):
+        """Closes of a tag that is not open, under a deep stack, cost
+        O(1) each: 65,536 of them took minutes when each scanned the
+        stack."""
+        import time
+
+        n = 65536
+        html = ("<div>" * n + "</span>" * n + "<p>after the strays</p>").encode()
+        t0 = time.monotonic()
+        assert html_extract(html).text == "after the strays"
+        assert time.monotonic() - t0 < 10.0
+
+    def test_close_unwinds_to_nearest_open_tag(self):
+        # </div> closes the unclosed <p> and <nav> inside it; </nav> after
+        # that is stray, so the boilerplate context ended with the div
+        html = (
+            b"<div><nav><p>menu entry words</div></nav>"
+            b"<p>content after the div</p></b>"
+        )
+        assert html_extract(html).text == "content after the div"
+
     def test_block_count_metrics(self):
         html = b"<body><nav><a href='/'>Home</a></nav><p>content words here</p></body>"
         out = html_extract(html)
@@ -230,6 +251,55 @@ class TestPdfExtract:
         t0 = time.monotonic()
         assert pdf_extract_pages(out) == ["only"]
         assert time.monotonic() - t0 < 5.0
+
+    def test_runs_at_distinct_y_cost_linear_time(self):
+        """One page of runs, each on a line of its own: finding a run's
+        line is O(1), not a scan of every line made so far (65,536 runs
+        took minutes that way)."""
+        import time
+
+        n = 65536
+        content = b"BT " + b"".join(b"0 -1 Td (w%d) Tj " % k for k in range(n)) + b"ET"
+        t0 = time.monotonic()
+        assert pdf_extract_pages(_plain_pdf(content)) == [
+            "\n".join(f"w{k}" for k in range(n))
+        ]
+        assert time.monotonic() - t0 < 10.0
+
+    def test_run_joins_first_made_line_within_tolerance(self):
+        # lines at y=2 and y=1.4; a run at 1.7 is within 0.5 of both
+        content = b"BT 0 2 Td (a) Tj 0 -0.6 Td (b) Tj 0 0.3 Td (c) Tj ET"
+        assert pdf_extract_pages(_plain_pdf(content)) == ["ac\nb"]
+
+    def test_non_finite_y_makes_a_line_per_run(self):
+        # a 400-digit operand overflows to inf, and inf - inf is nan;
+        # neither is within tolerance of anything, itself included
+        big = b"9" * 400
+        content = (
+            b"BT 0 " + big + b" Td (a) Tj 0 -" + big
+            + b" Td (b) Tj (c) Tj 0 0 Td (d) Tj ET"
+        )
+        assert pdf_extract_pages(_plain_pdf(content)) == ["a\nb\nc\nd"]
+
+    def test_unterminated_objects_scan_in_linear_time(self):
+        """Object headers with no endobj after a whole pdf: each object
+        runs to the end of the file. The scan searches the pdf in place
+        and resumes each search where the last one stopped (32,768 of
+        them took minutes when each copied and searched the rest of
+        the file)."""
+        import time
+
+        from ocr_spark.pdf_extract import _scan_objects
+
+        pdf, truth = corpus.make_pdf(random.Random(5))
+        n = 32768
+        tail = b"9999 0 obj\n<< /Length 4 >>\n" * n + b"stream\nabcdef"
+        t0 = time.monotonic()
+        objects = _scan_objects(pdf + tail)
+        assert "\n\n".join(p for p in pdf_extract_pages(pdf + tail) if p) == truth
+        assert time.monotonic() - t0 < 10.0
+        body, data = objects[9999]
+        assert bytes(body) == b"\n<< /Length 4 >>\n" and data == b"abcd"
 
     def test_many_seeds_roundtrip(self):
         for seed in range(40):
@@ -405,6 +475,70 @@ def _golden_records():
     for _ in range(1500):
         text = _mutate(rng, rng.choice(contents), _PDF_FRAGMENTS)
         yield pdf_record(_plain_pdf(text.encode("latin-1")))
+
+
+def test_fused_commands_match_the_token_loop():
+    """_extract_runs takes a whole ``x y Td``, ``(lit) Tj``, ``T*`` or
+    ``a b c d e f Tm`` in one step while its operand stack is empty. A
+    comment between every pair of tokens leaves every multi-token
+    command to the token loop, so the two streams must give the same
+    runs, or raise the same error, whatever the operands."""
+    from ocr_spark.pdf_extract import _extract_runs
+
+    rng = random.Random(77)
+
+    def runs(stream):
+        try:
+            return _extract_runs(stream)
+        except Exception as exc:  # wrong operand types raise; the class is the result
+            return type(exc).__name__
+
+    def num():
+        return rng.choice(("0", "12", "-14", "+3", "1.5", "-.3", ".25", "72.", "700"))
+
+    operands = (
+        num, num, num,
+        lambda: "(" + rng.choice(("", "a b", "x%y", "tail.")) + ")",
+        lambda: "(esc\\(aped)",
+        lambda: "<4142>",
+        lambda: "/F1",
+        lambda: "[(a) -20 (b)]",
+    )
+    operators = ("Td", "TD", "Tm", "Tj", "T*", "TJ", "'", "TL", "BT", "ET", "Tf", "Tz")
+    for _ in range(400):
+        tokens = ["BT"]
+        for _ in range(rng.randint(1, 30)):
+            shape = rng.random()
+            if shape < 0.2:
+                tokens += [num(), num(), rng.choice(("Td", "TD"))]
+            elif shape < 0.35:
+                tokens += [operands[3](), "Tj"]
+            elif shape < 0.45:
+                tokens += [num() for _ in range(6)] + ["Tm"]
+            elif shape < 0.55:
+                tokens.append("T*")
+            else:
+                tokens += [rng.choice(operands)() for _ in range(rng.randint(0, 3))]
+                tokens.append(rng.choice(operators))
+        plain = rng.choice((" ", "\n", "\t", " \x00 ")).join(tokens).encode("latin-1")
+        commented = "%c\n".join(tokens).encode("latin-1")
+        assert runs(plain) == runs(commented), plain
+
+
+def test_object_headers_match_the_forward_scan():
+    """_object_headers finds each header from its ``obj``; it must give
+    exactly the matches of a forward ``_OBJ_RE.finditer``."""
+    from ocr_spark.pdf_extract import _OBJ_RE, _object_headers
+
+    rng = random.Random(99)
+    fragments = (
+        b"obj", b"1", b"12", b"0", b" ", b"\n", b"\r\n", b"\t", b"\x0c", b"x",
+        b"_", b"objx", b"endobj", b"9 0 obj", b"<<", b">>", b"(", b"stream",
+    )
+    for _ in range(3000):
+        data = b"".join(rng.choice(fragments) for _ in range(rng.randint(0, 40)))
+        want = [(m.span(), m.groups()) for m in _OBJ_RE.finditer(data)]
+        assert [(m.span(), m.groups()) for m in _object_headers(data)] == want, data
 
 
 GOLDEN_SHA256 = "752cac22e81c2c8103e473dbffe38e8e4a86b8bf5fb695d3e2580118e059d9e1"

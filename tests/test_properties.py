@@ -56,9 +56,9 @@ def test_html_extract_arbitrary_text_never_raises(text):
 def test_html_tag_soup_invariants(parts):
     html = "".join(parts)
     blocks = tokenize_blocks(html)
-    for b in blocks:
-        assert b.text == " ".join(b.text.split())
-        assert b.chars >= 0 and b.link_chars <= b.chars + len(b.text)
+    for text, _tag, chars, link_chars, *_ in blocks:
+        assert text == " ".join(text.split())
+        assert chars >= 0 and link_chars <= chars + len(text)
     out = html_extract(html.encode())
     # no script content, no angle-bracket markup in extracted text
     assert "<script" not in out.text
