@@ -107,7 +107,7 @@ def _extract(
             return kind, "completed", None, pages, pdf_assemble(pages)
         out = html_extract(payload)
         return kind, "completed", None, [out.text], out
-    except Exception as exc:  # pragma: no cover - defensive, R2 semantics
+    except Exception as exc:  # R2: pdf content budget, wrong-type pdf operands
         return kind, "failed", f"{type(exc).__name__}: {exc}", [], None
 
 
@@ -304,17 +304,13 @@ def extract_documents(
     return _balanced_map(df, _balance(n_partitions, strategy), batch_fn)
 
 
-def extract_spans(
-    df: DataFrame,
-    n_partitions: Optional[int] = None,
-    strategy: str = "scan",
-) -> DataFrame:
+def extract_spans(df: DataFrame, n_partitions: Optional[int] = None) -> DataFrame:
     """Span-level variant of :func:`extract_documents` — same admission
-    and balance strategies, output fan-out is one row per span. Scale
-    shape is identical to the document path (the span fan-out happens
-    inside the Arrow batch, no extra shuffle)."""
+    and the default scan balance, output fan-out is one row per span.
+    Scale shape is identical to the document path (the span fan-out
+    happens inside the Arrow batch, no extra shuffle)."""
     return _balanced_map(
-        df, _balance(n_partitions, strategy), extract_spans_batch, SPANS_SCHEMA
+        df, _balance(n_partitions, "scan"), extract_spans_batch, SPANS_SCHEMA
     )
 
 

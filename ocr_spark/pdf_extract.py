@@ -14,15 +14,20 @@ Per-page text joins lines with '\\n'; the document joins pages with
 Scope is honest (SURVEY.md §7): flate or plain streams, literal/hex
 strings, standard simple fonts with latin-1-ish byte mapping — the
 profile the corpus generator emits — not arbitrary wild PDFs. Unparseable
-objects and broken flate streams are skipped. Two things raise, so the
-caller records a failed row: flate output past MAX_INFLATED_BYTES per
-document, and operands of the wrong type for a text operator.
+objects and broken flate streams are skipped. Objects never overlap: a
+body ends at its own ``endobj`` or at the next object header, whichever
+comes first, and stream data runs to ``/Length`` or ``endstream``, never
+past the ``endobj`` (a header inside it is data). Two things raise, so
+the caller records a failed row: content streams past MAX_INFLATED_BYTES
+per document (flate output and plain streams, counted once per page
+reference), and operands of the wrong type for a text operator.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from itertools import chain, pairwise
 from math import isfinite
 from typing import Dict, Iterator, List, Optional, Tuple
 
@@ -49,9 +54,10 @@ _FLATE_RE = re.compile(rb"/Filter\s*/FlateDecode\b")
 
 _LINE_Y_TOLERANCE = 0.5
 
-# Most bytes the flate content streams of one document may inflate to
-# (MAX_PDF_PAGES pages at 128 KiB each). A stream that would pass it
-# raises instead of growing memory without limit.
+# Most bytes the content streams of one document may hold, flate
+# output or plain, counted once per page reference (MAX_PDF_PAGES pages
+# at 128 KiB each). A stream that would pass it raises instead of
+# growing memory or time without limit.
 MAX_INFLATED_BYTES = 64 * 1024 * 1024
 
 
@@ -67,54 +73,43 @@ def _object_headers(pdf: bytes) -> Iterator["re.Match"]:
             yield _OBJ_RE.match(pdf, n - head.end())
 
 
-def _scan_objects(pdf: bytes) -> Dict[int, Tuple[memoryview, Optional[bytes]]]:
-    """Map object number -> (dict/body view, raw stream bytes or None).
-
-    A linear scan for ``N G obj`` is more robust than trusting the xref
-    table. An object runs to the next ``endobj``, or to the end of the
-    file. Bodies are zero-copy views into ``pdf``.
-
-    Each search finds the next ``endobj``, ``stream``, ``/Length`` or
-    ``endstream`` at or after a position that only grows, so its result
-    is kept until an object starts past it: the scan reads the file
-    about once even when no object ends. None of these keywords can
-    straddle the ``endobj`` that ends an object, so a match that starts
-    inside an object lies inside it.
-    """
-    objects: Dict[int, Tuple[memoryview, Optional[bytes]]] = {}
-    view = memoryview(pdf)
+def _scan_objects(pdf: bytes) -> Dict[int, Tuple[bytes, Optional[bytes]]]:
+    """Map object number -> (dict/body, raw stream bytes or None), by a
+    linear scan for ``N G obj`` (more robust than trusting the xref
+    table) and the boundary rule above. Every search is bounded by its
+    own object but the one for ``endobj``, whose result is kept until
+    an object starts past it, so the scan is linear on any input."""
+    objects: Dict[int, Tuple[bytes, Optional[bytes]]] = {}
     n = len(pdf)
-    end = send = -1  # next endobj / endstream; n when there is none
-    sm = _STREAM_RE.search(pdf)
-    lm = _LENGTH_RE.search(pdf)
-    for m in _object_headers(pdf):
+    end = data_end = -1  # next endobj (n when there is none) / end of stream data
+    for m, following in pairwise(chain(_object_headers(pdf), [None])):
         start = m.end()
+        if m.start() < data_end:
+            continue
         if end < start:
             end = pdf.find(b"endobj", start)
             if end == -1:
                 end = n
-        if sm is not None and sm.start() < start:
-            sm = _STREAM_RE.search(pdf, start)
-        stream_data: Optional[bytes] = None
-        if sm is not None and sm.start() < end:
-            data_start = sm.end()
-            if lm is not None and lm.start() < start:
-                lm = _LENGTH_RE.search(pdf, start)
-            if lm is not None and lm.start() < sm.start():
-                stream_data = pdf[data_start : min(data_start + int(lm[1]), end)]
-            else:
-                if send < data_start:
-                    send = pdf.find(b"endstream", data_start)
-                    if send == -1:
-                        send = n
-                stream_data = pdf[data_start : min(send, end)].rstrip(b"\r\n")
-            objects[int(m[1])] = (view[start : sm.start()], stream_data)
+        body_end = end if following is None else min(end, following.start())
+        sm = _STREAM_RE.search(pdf, start, body_end)
+        if sm is None:
+            objects[int(m[1])] = (pdf[start:body_end], None)
+            continue
+        data_start = sm.end()
+        lm = _LENGTH_RE.search(pdf, start, sm.start())
+        if lm is not None:
+            data_end = min(data_start + int(lm[1]), end)
+            stream_data = pdf[data_start:data_end]
         else:
-            objects[int(m[1])] = (view[start:end], None)
+            data_end = pdf.find(b"endstream", data_start, end)
+            if data_end == -1:
+                data_end = end
+            stream_data = pdf[data_start:data_end].rstrip(b"\r\n")
+        objects[int(m[1])] = (pdf[start : sm.start()], stream_data)
     return objects
 
 
-def _page_order(objects: Dict[int, Tuple[memoryview, Optional[bytes]]]) -> List[int]:
+def _page_order(objects: Dict[int, Tuple[bytes, Optional[bytes]]]) -> List[int]:
     """Page object numbers in document order via the /Pages tree; falls
     back to file order of /Type /Page objects."""
     catalog_pages: Optional[int] = None
@@ -153,25 +148,22 @@ def _page_order(objects: Dict[int, Tuple[memoryview, Optional[bytes]]]) -> List[
 
 def _inflate(data: bytes, budget: int) -> Optional[bytes]:
     """Flate-decode ``data``; None unless it is one complete zlib stream
-    (trailing bytes are ignored). Raises ValueError when the output
-    would pass ``budget`` bytes."""
+    (trailing bytes are ignored) or its output passes ``budget`` bytes,
+    where decoding stops one byte past it."""
     inflater = zlib.decompressobj()
     try:
         out = inflater.decompress(data, budget + 1)
     except zlib.error:
         return None
-    if len(out) > budget:
-        raise ValueError(
-            f"flate output exceeds MAX_INFLATED_BYTES ({MAX_INFLATED_BYTES} per document)"
-        )
-    return out if inflater.eof else None
+    return out if inflater.eof or len(out) > budget else None
 
 
 def _content_streams(
-    page_body: memoryview, objects: Dict[int, Tuple[memoryview, Optional[bytes]]], budget: int
+    page_body: bytes, objects: Dict[int, Tuple[bytes, Optional[bytes]]], budget: int
 ) -> Tuple[List[bytes], int]:
     """The page's content streams, flate-decoded, and what is left of
-    the document's inflate ``budget``."""
+    the document's content ``budget``. Raises ValueError when they
+    would pass it."""
     refs: List[int] = []
     m = _CONTENTS_RE.search(page_body)
     if m:
@@ -191,7 +183,11 @@ def _content_streams(
             data = _inflate(data, budget)
             if data is None:
                 continue
-            budget -= len(data)
+        if len(data) > budget:
+            raise ValueError(
+                f"content streams exceed MAX_INFLATED_BYTES ({MAX_INFLATED_BYTES} per document)"
+            )
+        budget -= len(data)
         streams.append(data)
     return streams, budget
 

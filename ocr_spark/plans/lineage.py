@@ -104,37 +104,45 @@ def lineage_rows(extracted: DataFrame, run_id: str, n_buckets: int) -> DataFrame
     return agg.select(*_LINEAGE_COLUMNS)
 
 
-def _latest_rows(spark: SparkSession, lineage_path: str) -> list:
-    """The latest lineage row of every bucket, by ``finished_at``.
-
-    Collected to the driver on purpose: the rows are tiny (≤ the bucket
-    count) and materializing them FREEZES resume state at plan time — a
-    lazy read of the lineage table here would be re-evaluated by later
-    actions in the same job, after this run has appended its own
-    lineage rows, silently emptying the pending set. A missing path is
-    checked for, not read (a failed read logs a Java stack trace). The
-    read names its schema, so a directory with no parquet file yet (a
-    first run killed in its lineage append) reads as no rows.
-    """
+def _latest(spark: SparkSession, lineage_path: str) -> Optional[DataFrame]:
+    """The latest lineage row of every bucket, by ``finished_at``, as a
+    lazy frame; None if no lineage exists yet. A missing path is checked
+    for, not read (a failed read logs a Java stack trace). The read
+    names its schema, so a directory with no parquet file yet (a first
+    run killed in its lineage append) reads as no rows."""
     fs, Path = hadoop_fs(spark, lineage_path)
     if not fs.exists(Path(lineage_path)):
-        return []
+        return None
     lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    latest = lineage.groupBy("bucket").agg(
+    return lineage.groupBy("bucket").agg(
         F.max_by(F.struct(*_LINEAGE_COLUMNS), "finished_at").alias("row")
-    )
-    return [r.row for r in latest.collect()]
+    ).select("row.*")
 
 
-def _done(latest: list) -> dict:
-    """bucket -> row, for the buckets whose latest row is ``done``."""
-    return {r.bucket: r for r in latest if r.status == "done"}
+def _resume_state(spark: SparkSession, lineage_path: str) -> Tuple[list, list]:
+    """(the ``n_buckets`` values the latest rows record, the sorted ids
+    of the buckets whose latest row is ``done``), aggregated on the JVM
+    into one row and collected.
+
+    Collected on purpose: it FREEZES resume state at plan time — a lazy
+    read of the lineage table here would be re-evaluated by later
+    actions in the same job, after this run has appended its own
+    lineage rows, silently emptying the pending set.
+    """
+    latest = _latest(spark, lineage_path)
+    if latest is None:
+        return [], []
+    done = F.when(F.col("status") == "done", F.col("bucket"))
+    state = latest.agg(
+        F.collect_set("n_buckets"), F.sort_array(F.collect_list(done))
+    ).first()
+    return list(state[0]), list(state[1])
 
 
 def done_buckets(spark: SparkSession, lineage_path: str) -> list:
     """Sorted ids of the buckets whose latest lineage row is ``done``
-    (see _latest_rows); empty if no lineage exists yet."""
-    return sorted(_done(_latest_rows(spark, lineage_path)))
+    (see _resume_state); empty if no lineage exists yet."""
+    return _resume_state(spark, lineage_path)[1]
 
 
 def _in_buckets(done: list) -> Column:
@@ -155,19 +163,18 @@ def _pending(
 ) -> Tuple[DataFrame, list]:
     """(rows of ``input_df``, with ``bucket``, whose bucket is not done;
     the sorted done ids), the done-set snapshotted now (see
-    _latest_rows). Raises ValueError if the lineage was written under
+    _resume_state). Raises ValueError if the lineage was written under
     another bucket count: its bucket ids name other sets of urls, so
     resuming would duplicate some documents and skip others. Rows
     written before lineage recorded the count carry null and are not
     checked."""
-    latest = _latest_rows(spark, lineage_path)
-    recorded = sorted({r.n_buckets for r in latest} - {None, n_buckets})
+    recorded, done = _resume_state(spark, lineage_path)
+    recorded = sorted(set(recorded) - {n_buckets})
     if recorded:
         raise ValueError(
             f"lineage at {lineage_path} was written with n_buckets="
             f"{', '.join(map(str, recorded))}; this run asks for n_buckets={n_buckets}"
         )
-    done = sorted(_done(latest))
     with_bucket = input_df.withColumn("bucket", url_bucket(n_buckets))
     return with_bucket.filter(~_in_buckets(done)), done
 
@@ -283,7 +290,10 @@ def audit_buckets(
     Reads the metadata of every done bucket, so it is a call of its
     own, like ``output_is_complete``, not a step of every run.
     """
-    done = _done(_latest_rows(spark, lineage_path))
+    latest = _latest(spark, lineage_path)
+    done = {} if latest is None else {
+        r.bucket: r for r in latest.filter(F.col("status") == "done").collect()
+    }
     found = {}
     fs, Path = hadoop_fs(spark, output_path)
     if done and fs.exists(Path(output_path)):
